@@ -7,11 +7,12 @@ Cluster usage (north_rule deployment shape):
         --py-files dist/palladian_spark.zip \\
         jobs/run_kg.py \\
         --input  <transcripts table/parquet dir> \\
-        --output <output dir>  [--buckets 64] [--partitions N]
+        --output <output dir>  [--buckets 64]
 
 The job reads the transcripts table (conv_id, turn_idx, role, text, tool,
-ts), runs the full pipeline (salted repartition → fused NER+relations →
-broadcast linking → canonical triples) bucket-wise with lineage rows, and
+ts), runs the full pipeline (salted repartition → one fused NER +
+relations + broadcast-linking stage → deduplicated canonical triples)
+bucket-wise with lineage rows, and
 is resumable: rerunning with the same --output anti-joins completed
 buckets and only computes the rest.
 
@@ -34,8 +35,6 @@ def main(argv=None) -> int:
                    help="output dir for triples/ + lineage/")
     p.add_argument("--buckets", type=int, default=64,
                    help="lineage bucket count (checkpoint-resume units)")
-    p.add_argument("--partitions", type=int, default=None,
-                   help="salted repartition width for the NER stage")
     p.add_argument("--entity-dict", default=None,
                    help="optional parquet with (entity_id, surface, concept)")
     p.add_argument("--min-link-sim", type=float, default=None,
@@ -62,7 +61,6 @@ def main(argv=None) -> int:
                           entity_dict=entity_dict,
                           output_dir=args.output,
                           n_buckets=args.buckets,
-                          partitions=args.partitions,
                           min_link_sim=args.min_link_sim,
                           drop_unlinked=args.drop_unlinked)
     n = result.triples.count()

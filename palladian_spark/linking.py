@@ -306,35 +306,3 @@ def link_mentions(mentions: DataFrame, entity_dict: DataFrame,
                 .drop("_key", "_entity_id", "_canonical", "_concept",
                       "_f_entity_id", "_f_canonical", "_f_concept", "_f_sim"))
     return resolved
-
-
-def similarity_join(left: DataFrame, right: DataFrame,
-                    left_col: str, right_col: str,
-                    metric: str = "jaro_winkler",
-                    threshold: float = 0.9) -> DataFrame:
-    """Generic broadcast similarity join: pairs (left_col, right_col, sim)
-    with sim ≥ threshold.  Right side must be broadcast-small."""
-    rows = [r[0] for r in right.select(right_col).distinct().collect()]
-    bc = left.sparkSession.sparkContext.broadcast(rows)
-    sim_fn = METRICS[metric]
-
-    schema = StructType([
-        StructField("left_value", StringType()),
-        StructField("right_value", StringType()),
-        StructField("sim", DoubleType()),
-    ])
-
-    def matcher(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        candidates = bc.value
-        for pdf in iterator:
-            out = {"left_value": [], "right_value": [], "sim": []}
-            for value in pdf[left_col]:
-                for cand in candidates:
-                    s = sim_fn(value, cand)
-                    if s >= threshold:
-                        out["left_value"].append(value)
-                        out["right_value"].append(cand)
-                        out["sim"].append(s)
-            yield pd.DataFrame(out)
-
-    return left.select(left_col).distinct().mapInPandas(matcher, schema)

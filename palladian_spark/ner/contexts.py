@@ -13,8 +13,6 @@ from palladian_spark.textproc.taggers import Annotation
 
 WINDOW_SIZE = 40  # PalladianNerTrainingSettings.java:88
 
-_PUNCTUATION = set(".,:;?!")
-
 
 def get_left_contexts(ann: Annotation, text: str, size: int = 3) -> List[str]:
     """Cumulative 1..size word windows left of the annotation, digits → '§'
@@ -30,26 +28,6 @@ def get_left_contexts(ann: Annotation, text: str, size: int = 3) -> List[str]:
             value = re.sub(r"\d", "§", "".join(buf).strip())
             if value:
                 contexts.append(value[::-1])  # restore reading order
-        if len(contexts) == size:
-            break
-    return contexts
-
-
-def get_right_contexts(ann: Annotation, text: str, size: int = 3) -> List[str]:
-    """Cumulative 1..size word windows right of the annotation; digits → '§';
-    trailing punctuation stripped (NerHelper.java:270-298)."""
-    contexts: List[str] = []
-    buf: List[str] = []
-    for idx in range(ann.end, len(text)):
-        ch = text[idx]
-        buf.append(ch)
-        if ch == " " or idx == 0:
-            value = re.sub(r"\d", "§", "".join(buf).strip())
-            if value:
-                if value[-1] in _PUNCTUATION:
-                    value = value[:-1]
-                if value:
-                    contexts.append(value)
         if len(contexts) == size:
             break
     return contexts

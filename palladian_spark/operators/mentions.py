@@ -186,14 +186,6 @@ def extract_candidates(transcripts: DataFrame) -> DataFrame:
             .mapInPandas(_batch_tagger(tag_candidates), MENTION_SCHEMA))
 
 
-def extract_regex_mentions(transcripts: DataFrame, kind: str) -> DataFrame:
-    """URL / date / smiley regex taggers as standalone stages."""
-    tagger = {"url": tag_urls, "date": tag_dates, "smiley": tag_smileys}[kind]
-    return (transcripts
-            .select("conv_id", "turn_idx", "text")
-            .mapInPandas(_batch_tagger(tagger), MENTION_SCHEMA))
-
-
 def word_tokens_df(transcripts: DataFrame) -> DataFrame:
     """Word tokenization with character offsets (WordTokenizer.java:22-34,
     TOKEN_SPLIT_REGEX Tokenizer.java:27) as an Arrow-batched stage — the
@@ -432,21 +424,6 @@ def combine_adjacent_df(mentions: DataFrame, gap: int = 1) -> DataFrame:
                  F.first("tag").alias("tag"),
                  F.max("conf").alias("conf"))
             .drop("_island"))
-
-
-def switch_tag_with_dictionary_df(mentions: DataFrame,
-                                  entity_dict: DataFrame) -> DataFrame:
-    """Exact entity-dictionary hit overrides the tag (PalladianNer.java:515-543)
-    as a broadcast hash join on the surface form.  ``entity_dict`` columns:
-    (surface, concept)."""
-    dict_df = F.broadcast(entity_dict.select(
-        F.col("surface").alias("_surface"), F.col("concept").alias("_concept")))
-    return (mentions
-            .join(dict_df, mentions.value == dict_df._surface, "left")
-            .withColumn("tag", F.coalesce("_concept", "tag"))
-            .withColumn("conf", F.when(F.col("_concept").isNotNull(), F.lit(1.0))
-                        .otherwise(F.col("conf")))
-            .drop("_surface", "_concept"))
 
 
 def assert_text_equality(transcripts: DataFrame, mentions: DataFrame) -> int:

@@ -104,14 +104,6 @@ def extract_media_metadata(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, META_SCHEMA)
 
 
-def resize_stub(media: DataFrame, target_w: int = 224,
-                target_h: int = 224) -> DataFrame:
-    """Resize stage stub: passes payload through, records intended output
-    dims.  A real build decodes + resizes inside the same batch loop."""
-    return media.withColumn("target_w", F.lit(target_w)) \
-                .withColumn("target_h", F.lit(target_h))
-
-
 def sample_frames_stub(media: DataFrame, every_n: int = 10) -> DataFrame:
     """Frame-sampling stub for video payloads: emits (media_id, frame_idx)
     rows from the fake frame count — the explode shape a real sampler

@@ -5,8 +5,7 @@ LoC, single JVM).  At corpus scale the same job is FP-Growth in
 ``pyspark.ml.fpm`` — distributed, shuffle-efficient — so we wrap it
 instead of porting the Java loop (the survey's own recommendation).
 
-Use cases here: generalizing mined relation windows (which inter-mention
-word sets co-occur) and event-type basket analysis per session.
+Use case here: event-type basket analysis per session.
 """
 
 from __future__ import annotations
@@ -36,12 +35,3 @@ def session_event_baskets(events: DataFrame,
     with_id = session_islands(events, timeout_minutes, user_col, ts_col)
     return (with_id.groupBy(user_col, "session_id")
             .agg(F.array_sort(F.collect_set("event_type")).alias("items")))
-
-
-def window_term_baskets(mined_patterns: DataFrame,
-                        window_col: str = "window") -> DataFrame:
-    """Mined inter-mention windows → word baskets (pattern
-    generalization: which window words co-occur across type pairs)."""
-    return mined_patterns.select(
-        F.array_sort(F.array_distinct(
-            F.split(F.col(window_col), " "))).alias("items"))

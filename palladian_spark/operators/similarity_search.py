@@ -245,24 +245,14 @@ def block_matmul_pairs(embeddings: DataFrame, threshold: float = 0.95,
     return pairs.mapInPandas(run, PAIRS_SCHEMA)
 
 
-# Backwards-compatible names: the "brute force" entry points now run the
-# distributed block matmul (same results, same determinism, no collect()).
+# Backwards-compatible name: the "brute force" top-k entry point now runs
+# the distributed block matmul (same results, same determinism, no collect()).
 def brute_force_top_k(embeddings: DataFrame, k: int = 1,
                       round_decimals: int = 4,
                       id_col: str = "vec_id",
                       vec_col: str = "embedding", **kw) -> DataFrame:
     """Exact cosine top-k per vector — alias of block_matmul_top_k."""
     return block_matmul_top_k(embeddings, k=k, round_decimals=round_decimals,
-                              id_col=id_col, vec_col=vec_col, **kw)
-
-
-def brute_force_pairs(embeddings: DataFrame, threshold: float = 0.95,
-                      round_decimals: int = 4,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding", **kw) -> DataFrame:
-    """Exact thresholded cosine pairs — alias of block_matmul_pairs."""
-    return block_matmul_pairs(embeddings, threshold=threshold,
-                              round_decimals=round_decimals,
                               id_col=id_col, vec_col=vec_col, **kw)
 
 

@@ -1,8 +1,8 @@
 """End-to-end KG-construction pipeline with lineage & checkpoint-resume.
 
-    transcripts → (salted repartition) → fused NER+relation stage →
-    canonicalize (broadcast linking) → triples parquet
-    + per-bucket lineage/metrics table
+    transcripts → (salted repartition) → ONE fused NER + relations +
+    linking stage (broadcast model and dictionary) → dedup → triples
+    parquet + per-bucket lineage/metrics table
 
 Checkpoint design (replaces the reference's monolithic serialized model
 file, PalladianNer.java:174-182): work is partitioned into ``n_buckets``
@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from palladian_spark.data.transcripts import entity_dictionary_pdf
 from palladian_spark.ner.model import NerModel
 from palladian_spark.ner.train import build_annotation_dictionary, build_entity_dictionary
-from palladian_spark.operators.mentions import repartition_salted
 from palladian_spark.relations import (
     DEFAULT_PATTERNS, extract_canonical_triples,
 )
@@ -66,7 +65,6 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
                  patterns: Sequence = tuple(DEFAULT_PATTERNS),
                  output_dir: Optional[str] = None,
                  n_buckets: int = 16,
-                 partitions: Optional[int] = None,
                  min_link_sim: Optional[float] = None,
                  drop_unlinked: bool = False) -> PipelineResult:
     """Run the full pipeline.  With ``output_dir`` set, runs bucket-wise with
@@ -79,14 +77,12 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
             entity_dictionary_pdf().assign(
                 entity_id=lambda d: d["concept"].str.lower() + ":" + d["surface"]))
 
-    def compute(df: DataFrame,
-                cache_handles: Optional[list] = None) -> DataFrame:
+    def compute(df: DataFrame) -> DataFrame:
         # fused single-pass extraction+linking (the broadcastable-dict
         # default; extract_canonical_triples docstring has the trade-off
         # vs the staged mapping-first shape, which canonicalize_triples
         # keeps for huge alias dictionaries)
-        staged = repartition_salted(df, partitions) if partitions else df
-        return extract_canonical_triples(staged, model, entity_dict,
+        return extract_canonical_triples(df, model, entity_dict,
                                          patterns=patterns,
                                          min_link_sim=min_link_sim,
                                          drop_unlinked=drop_unlinked)
@@ -108,8 +104,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
     computed = 0
     for bucket in todo:
         part = bucketed.where(F.col("_bucket") == bucket).drop("_bucket")
-        handles: list = []
-        result = compute(part, cache_handles=handles).cache()
+        result = compute(part).cache()
         row_count = result.count()
         checksum = (result.select(
             F.sum(F.pmod(F.xxhash64("conv_id", "turn_idx", "subj", "pred",
@@ -127,8 +122,6 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
             "bucket int, stage string, row_count long, checksum long, finished_at double")
         lineage_row.write.mode("append").parquet(lineage_dir)
         result.unpersist()
-        for h in handles:  # per-bucket stage caches — don't leak across buckets
-            h.unpersist()
         computed += 1
 
     triples = spark.read.parquet(triples_dir).drop("bucket")

@@ -76,6 +76,31 @@ def compile_patterns(patterns: Sequence[PredicatePattern]):
 _MATCH_MISS = object()
 
 
+def _sentence_pairs(text: str, mentions: Sequence[ClassifiedAnnotation],
+                    masks) -> Iterator[tuple]:
+    """Same-sentence ordered mention pairs (a before b, not overlapping) —
+    the CoOccurrenceRetriever.java:27-60 candidate walk both the triple
+    kernel and the pattern miner run."""
+    if not mentions:
+        return
+    for sent in split_sentences(text, masks):
+        s_lo, s_hi = sent.start, sent.start + len(sent.value)
+        in_sent = [m for m in mentions if m.start >= s_lo and m.end <= s_hi]
+        for i, subj in enumerate(in_sent):
+            for obj in in_sent[i + 1:]:
+                if obj.start >= subj.end:  # overlapping/nested — no window
+                    yield subj, obj
+
+
+def _scan_turn(text: str, model: NerModel, classify_cache: dict):
+    """One url/date/smiley scan per turn, reused as NER add-on taggers AND
+    as sentence masks → (mentions, masks)."""
+    urls, dates, smileys = tag_urls(text), tag_dates(text), tag_smileys(text)
+    mentions = get_annotations(text, model, classify_cache=classify_cache,
+                               url_annotations=urls, date_annotations=dates)
+    return mentions, urls + dates + smileys
+
+
 def triples_from_mentions(text: str, mentions: Sequence[ClassifiedAnnotation],
                           patterns: Sequence[PredicatePattern],
                           masks=None, compiled=None,
@@ -93,89 +118,107 @@ def triples_from_mentions(text: str, mentions: Sequence[ClassifiedAnnotation],
     out: List[tuple] = []
     if compiled is None:
         compiled = compile_patterns(patterns)
-    for sent in split_sentences(text, masks):
-        s_lo, s_hi = sent.start, sent.start + len(sent.value)
-        in_sent = [m for m in mentions if m.start >= s_lo and m.end <= s_hi]
-        for i, subj in enumerate(in_sent):
-            for obj in in_sent[i + 1:]:
-                if obj.start < subj.end:
-                    continue  # overlapping/nested — no window
-                window = text[subj.end:obj.start]
-                key = (window, subj.tag, obj.tag)
-                hit = (match_cache.get(key, _MATCH_MISS)
-                       if match_cache is not None else _MATCH_MISS)
-                if hit is _MATCH_MISS:
-                    hit = None
-                    for idx, (p, rx) in enumerate(compiled):
-                        if p.subj_types and subj.tag not in p.subj_types:
-                            continue
-                        if p.obj_types and obj.tag not in p.obj_types:
-                            continue
-                        if rx.fullmatch(window):
-                            hit = idx
-                            break
-                    if match_cache is not None and len(match_cache) < 1_000_000:
-                        match_cache[key] = hit
-                if hit is not None:
-                    p = compiled[hit][0]
-                    conf = min(
-                        subj.scores.get(subj.tag, 1.0) if subj.scores else 1.0,
-                        obj.scores.get(obj.tag, 1.0) if obj.scores else 1.0)
-                    out.append((subj.value, p.pred, obj.value,
-                                subj.start, subj.end, obj.start, obj.end,
-                                float(conf)))
+    for subj, obj in _sentence_pairs(text, mentions, masks):
+        window = text[subj.end:obj.start]
+        key = (window, subj.tag, obj.tag)
+        hit = (match_cache.get(key, _MATCH_MISS)
+               if match_cache is not None else _MATCH_MISS)
+        if hit is _MATCH_MISS:
+            hit = None
+            for idx, (p, rx) in enumerate(compiled):
+                if p.subj_types and subj.tag not in p.subj_types:
+                    continue
+                if p.obj_types and obj.tag not in p.obj_types:
+                    continue
+                if rx.fullmatch(window):
+                    hit = idx
+                    break
+            if match_cache is not None and len(match_cache) < 1_000_000:
+                match_cache[key] = hit
+        if hit is not None:
+            p = compiled[hit][0]
+            conf = min(
+                subj.scores.get(subj.tag, 1.0) if subj.scores else 1.0,
+                obj.scores.get(obj.tag, 1.0) if obj.scores else 1.0)
+            out.append((subj.value, p.pred, obj.value,
+                        subj.start, subj.end, obj.start, obj.end,
+                        float(conf)))
     return out
 
 
-def extract_triples(transcripts: DataFrame, model: NerModel,
-                    patterns: Sequence[PredicatePattern] = tuple(DEFAULT_PATTERNS),
-                    ensure_parallelism: bool = True) -> DataFrame:
-    """The fused hot path: text → NER chain → sentence pairing → triples in
-    ONE Arrow-batched stage (model + patterns broadcast).  With
-    ``ensure_parallelism`` (default) the input is salted-repartitioned to
+def _extract(transcripts: DataFrame, model: NerModel,
+             patterns: Sequence[PredicatePattern],
+             make_linker=None, drop_unlinked: bool = False) -> DataFrame:
+    """The one triple-extraction stage: text → NER chain → sentence pairing
+    → triples (→ linked surfaces, when ``make_linker`` builds a worker-side
+    ``link(surface) -> canonical-or-None``) in ONE Arrow-batched stage
+    (model + patterns broadcast).  The input is salted-repartitioned to
     full parallelism first — the stage is Python-CPU-bound, so it must
     never inherit a coalesced 1-partition plan from a small upstream join."""
     from palladian_spark.operators.mentions import ensure_map_parallelism
-    if ensure_parallelism:
-        transcripts = ensure_map_parallelism(transcripts)
-    spark = transcripts.sparkSession
-    model_bc = spark.sparkContext.broadcast(model)
+    transcripts = ensure_map_parallelism(transcripts)
+    model_bc = transcripts.sparkSession.sparkContext.broadcast(model)
     patterns = list(patterns)
+    cols = TRIPLE_SCHEMA.fieldNames()
 
     def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         m = model_bc.value
+        link = make_linker() if make_linker is not None else None
         cache: dict = {}
         window_cache: dict = {}
         compiled = compile_patterns(patterns)
-        cols = ("conv_id", "turn_idx", "subj", "pred", "obj", "subj_start",
-                "subj_end", "obj_start", "obj_end", "conf")
         for pdf in iterator:
-            out = {k: [] for k in cols}
+            out = []
             for conv_id, turn_idx, text in zip(
                     pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
                 if text is None:
                     continue
-                # one scan each for url/date/smiley: reused as NER add-on
-                # taggers AND as sentence masks (they were previously run
-                # twice per turn)
-                urls, dates, smileys = (tag_urls(text), tag_dates(text),
-                                        tag_smileys(text))
-                mentions = get_annotations(text, m, classify_cache=cache,
-                                           url_annotations=urls,
-                                           date_annotations=dates)
-                for row in triples_from_mentions(
-                        text, mentions, patterns,
-                        masks=urls + dates + smileys, compiled=compiled,
-                        match_cache=window_cache):
-                    out["conv_id"].append(conv_id)
-                    out["turn_idx"].append(turn_idx)
-                    for k, v in zip(cols[2:], row):
-                        out[k].append(v)
-            yield pd.DataFrame(out)
+                mentions, masks = _scan_turn(text, m, cache)
+                out.extend((conv_id, turn_idx) + row
+                           for row in triples_from_mentions(
+                               text, mentions, patterns, masks=masks,
+                               compiled=compiled, match_cache=window_cache))
+            if link is not None:  # one linking pass over the batch's rows
+                raw, out = out, []
+                for conv_id, turn_idx, subj, pred, obj, *spans in raw:
+                    subj_c, obj_c = link(subj), link(obj)
+                    if drop_unlinked and (subj_c is None or obj_c is None):
+                        continue
+                    out.append((conv_id, turn_idx,
+                                subj if subj_c is None else subj_c, pred,
+                                obj if obj_c is None else obj_c, *spans))
+            yield pd.DataFrame(out, columns=cols)
 
     return (transcripts
             .select("conv_id", "turn_idx", "text")
             .mapInPandas(run, TRIPLE_SCHEMA))
+
+
+def _dedup_triples(triples: DataFrame) -> DataFrame:
+    """One row per (conv, turn, s, p, o): earliest spans, highest conf."""
+    return (triples.groupBy("conv_id", "turn_idx", "subj", "pred", "obj")
+            .agg(F.min("subj_start").alias("subj_start"),
+                 F.min("subj_end").alias("subj_end"),
+                 F.min("obj_start").alias("obj_start"),
+                 F.min("obj_end").alias("obj_end"),
+                 F.max("conf").alias("conf")))
+
+
+def _normalized_dictionary(entity_dict: DataFrame) -> DataFrame:
+    """(_key = normalized surface, _canon = min surface) — the ONE
+    dictionary-side normalization both linking paths use."""
+    from palladian_spark.linking import normalize_surface
+    return (entity_dict
+            .groupBy(normalize_surface(F.col("surface")).alias("_key"))
+            .agg(F.min("surface").alias("_canon")))
+
+
+def extract_triples(transcripts: DataFrame, model: NerModel,
+                    patterns: Sequence[PredicatePattern] = tuple(DEFAULT_PATTERNS)
+                    ) -> DataFrame:
+    """Raw (unlinked, undeduplicated) triples: the extraction stage with no
+    linker — the input of the staged canonicalize_triples."""
+    return _extract(transcripts, model, patterns)
 
 
 def extract_canonical_triples(transcripts: DataFrame, model: NerModel,
@@ -184,8 +227,7 @@ def extract_canonical_triples(transcripts: DataFrame, model: NerModel,
                               metric: str = "jaro_winkler",
                               threshold: float = 0.9,
                               min_link_sim: Optional[float] = None,
-                              drop_unlinked: bool = False,
-                              ensure_parallelism: bool = True) -> DataFrame:
+                              drop_unlinked: bool = False) -> DataFrame:
     """Fused extract_triples → canonicalize_triples: the NER chain, the
     relation patterns AND entity linking all run in ONE Arrow-batched
     stage; only the final per-(conv, turn, s, p, o) dedup aggregation
@@ -202,82 +244,31 @@ def extract_canonical_triples(transcripts: DataFrame, model: NerModel,
     vocabulary) with ZERO extra passes over the stream — right when the
     dictionary is model-sized, which is the pipeline default
     (measured: kg_triples 13.6 → ~9.5 s at sf0.1 local[32])."""
-    from palladian_spark.linking import (
-        make_surface_linker, normalize_surface,
-    )
-    from palladian_spark.operators.mentions import ensure_map_parallelism
-    if ensure_parallelism:
-        transcripts = ensure_map_parallelism(transcripts)
+    from palladian_spark.linking import make_surface_linker
     spark = transcripts.sparkSession
-    model_bc = spark.sparkContext.broadcast(model)
-    patterns = list(patterns)
     # dictionary-side structures, built ONCE on the driver with the SAME
     # Spark-side normalization as the staged path
-    norm_map = {r["_key"]: r["_canon"] for r in
-                (entity_dict
-                 .groupBy(normalize_surface(F.col("surface")).alias("_key"))
-                 .agg(F.min("surface").alias("_canon"))).collect()}
+    norm_map = {r["_key"]: r["_canon"]
+                for r in _normalized_dictionary(entity_dict).collect()}
     entries = ([(r["entity_id"], r["surface"], r["concept"]) for r in
                 entity_dict.select("entity_id", "surface", "concept")
                 .collect()]
                if fuzzy_enabled(metric) else [])
     link_bc = spark.sparkContext.broadcast((norm_map, entries))
-    link_args = (metric, threshold, min_link_sim)
 
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = model_bc.value
+    def make_linker():
         norm_map_w, entries_w = link_bc.value
-        link = make_surface_linker(norm_map_w, entries_w, *link_args)
-        cache: dict = {}
-        window_cache: dict = {}
-        compiled = compile_patterns(patterns)
-        cols = ("conv_id", "turn_idx", "subj", "pred", "obj", "subj_start",
-                "subj_end", "obj_start", "obj_end", "conf")
-        for pdf in iterator:
-            out = {k: [] for k in cols}
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                if text is None:
-                    continue
-                urls, dates, smileys = (tag_urls(text), tag_dates(text),
-                                        tag_smileys(text))
-                mentions = get_annotations(text, m, classify_cache=cache,
-                                           url_annotations=urls,
-                                           date_annotations=dates)
-                for row in triples_from_mentions(
-                        text, mentions, patterns,
-                        masks=urls + dates + smileys, compiled=compiled,
-                        match_cache=window_cache):
-                    subj_c = link(row[0])
-                    obj_c = link(row[2])
-                    if drop_unlinked and (subj_c is None or obj_c is None):
-                        continue
-                    out["conv_id"].append(conv_id)
-                    out["turn_idx"].append(turn_idx)
-                    out["subj"].append(subj_c if subj_c is not None
-                                       else row[0])
-                    out["pred"].append(row[1])
-                    out["obj"].append(obj_c if obj_c is not None else row[2])
-                    for k, v in zip(cols[5:], row[3:]):
-                        out[k].append(v)
-            yield pd.DataFrame(out)
+        return make_surface_linker(norm_map_w, entries_w, metric, threshold,
+                                   min_link_sim)
 
-    raw = (transcripts
-           .select("conv_id", "turn_idx", "text")
-           .mapInPandas(run, TRIPLE_SCHEMA))
-    return (raw.groupBy("conv_id", "turn_idx", "subj", "pred", "obj")
-            .agg(F.min("subj_start").alias("subj_start"),
-                 F.min("subj_end").alias("subj_end"),
-                 F.min("obj_start").alias("obj_start"),
-                 F.min("obj_end").alias("obj_end"),
-                 F.max("conf").alias("conf")))
+    return _dedup_triples(_extract(transcripts, model, patterns,
+                                   make_linker, drop_unlinked))
 
 
 def canonicalize_triples(triples: DataFrame, entity_dict: DataFrame,
                          metric: str = "jaro_winkler",
                          threshold: float = 0.9,
                          persist: bool = True,
-                         cache_handles: Optional[list] = None,
                          min_link_sim: Optional[float] = None,
                          drop_unlinked: bool = False) -> DataFrame:
     """Replace subj/obj surface forms with canonical entity surfaces via the
@@ -308,20 +299,12 @@ def canonicalize_triples(triples: DataFrame, entity_dict: DataFrame,
     The raw stream is persisted because passes 1 and 3 both read it (on a
     cluster the checkpointed ``triples`` lineage table serves this durably
     — pipeline.run_pipeline).
-
-    ``cache_handles``: callers that invoke this repeatedly (per micro-batch
-    / per bucket) pass a list; every DataFrame persisted here is appended
-    to it so the caller can unpersist after materializing the result —
-    otherwise each call leaks two cached tables until the ContextCleaner
-    collects them.
     """
     from palladian_spark.linking import fuzzy_link_df, normalize_surface
 
     if persist:
         from pyspark import StorageLevel
         triples = triples.persist(StorageLevel.MEMORY_AND_DISK)
-        if cache_handles is not None:
-            cache_handles.append(triples)
 
     # 1. distinct surfaces (map-side combinable)
     surfaces = (triples
@@ -329,10 +312,7 @@ def canonicalize_triples(triples: DataFrame, entity_dict: DataFrame,
                 .distinct())
 
     # 2. resolve the mapping on the small distinct set
-    dict_norm = F.broadcast(
-        entity_dict
-        .groupBy(normalize_surface(F.col("surface")).alias("_key"))
-        .agg(F.min("surface").alias("_canon")))
+    dict_norm = F.broadcast(_normalized_dictionary(entity_dict))
     resolved = (surfaces
                 .join(dict_norm, normalize_surface(F.col("value")) == F.col("_key"),
                       "left"))
@@ -354,8 +334,6 @@ def canonicalize_triples(triples: DataFrame, entity_dict: DataFrame,
         mapping = mapping.where(F.col("link_sim") >= min_link_sim)
     mapping = mapping.select("value", "canon")
     mapping = mapping.persist()
-    if cache_handles is not None:
-        cache_handles.append(mapping)
     mapping.count()  # materialize once; both broadcast builds read the cache
     mapping = F.broadcast(mapping)
 
@@ -376,13 +354,7 @@ def canonicalize_triples(triples: DataFrame, entity_dict: DataFrame,
            .drop("_ov", "_oc"))
     if drop_unlinked:
         out = out.where(F.col("_subj_linked") & F.col("_obj_linked"))
-    out = out.drop("_subj_linked", "_obj_linked")
-    return (out.groupBy("conv_id", "turn_idx", "subj", "pred", "obj")
-            .agg(F.min("subj_start").alias("subj_start"),
-                 F.min("subj_end").alias("subj_end"),
-                 F.min("obj_start").alias("obj_start"),
-                 F.min("obj_end").alias("obj_end"),
-                 F.max("conf").alias("conf")))
+    return _dedup_triples(out.drop("_subj_linked", "_obj_linked"))
 
 
 def fuzzy_enabled(metric: Optional[str]) -> bool:
@@ -541,27 +513,19 @@ def mine_patterns_df(transcripts: DataFrame, model: NerModel,
 
     def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         m = model_bc.value
+        cache: dict = {}
         for pdf in iterator:
             out = {"subj_type": [], "obj_type": [], "window": []}
             for text in pdf["text"]:
                 if text is None:
                     continue
-                mentions = get_annotations(text, m)
-                masks = tag_urls(text) + tag_dates(text) + tag_smileys(text)
-                for sent in split_sentences(text, masks):
-                    s_lo = sent.start
-                    s_hi = sent.start + len(sent.value)
-                    in_sent = [x for x in mentions
-                               if x.start >= s_lo and x.end <= s_hi]
-                    for i, a in enumerate(in_sent):
-                        for b in in_sent[i + 1:]:
-                            if b.start < a.end:
-                                continue
-                            window = text[a.end:b.start].strip().lower()
-                            if 0 < len(window) <= max_window_chars:
-                                out["subj_type"].append(a.tag)
-                                out["obj_type"].append(b.tag)
-                                out["window"].append(window)
+                mentions, masks = _scan_turn(text, m, cache)
+                for a, b in _sentence_pairs(text, mentions, masks):
+                    window = text[a.end:b.start].strip().lower()
+                    if 0 < len(window) <= max_window_chars:
+                        out["subj_type"].append(a.tag)
+                        out["obj_type"].append(b.tag)
+                        out["window"].append(window)
             yield pd.DataFrame(out)
 
     raw = transcripts.select("conv_id", "turn_idx", "text").mapInPandas(run, schema)

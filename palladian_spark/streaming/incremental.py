@@ -1,9 +1,9 @@
 """Incremental transcript ingestion via Structured Streaming.
 
 The reference is batch-only (single JVM, SURVEY.md §2.9); this module is
-the Spark-native extension: the SAME batch stages (extract_triples →
-canonicalize_triples) run unchanged under ``foreachBatch``, so batch and
-streaming share one code path and one set of correctness tests.
+the Spark-native extension: the SAME fused batch stage
+(extract_canonical_triples) runs unchanged under ``foreachBatch``, so batch
+and streaming share one code path and one set of correctness tests.
 
   * ``stream_transcripts``       — file-source readStream with the fixed
                                    input schema (BASELINE.json input_hint).

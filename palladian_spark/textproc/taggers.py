@@ -29,7 +29,6 @@ CANDIDATE_TAG = "CANDIDATE"
 URI_TAG = "URI"
 DATETIME_TAG = "DATETIME"
 SMILEY_TAG = "SMILEY"
-TWITTER_TAG = "TWITTER"
 NO_ENTITY = "###NO_ENTITY###"
 
 
@@ -202,13 +201,12 @@ def tag_dates(text: str) -> List[Annotation]:
 
 
 # ---------------------------------------------------------------------------
-# Smiley / Twitter taggers
+# Smiley tagger
 # ---------------------------------------------------------------------------
 
 _SMILEY_PATTERN = regex.compile(
     "|".join(regex.escape(s) for s in [":)", ":-)", ";)", ";-)", ":(", ":-(", ";(", ";-("])
 )
-_TWITTER_PATTERN = regex.compile(r"[@#]\w+")
 
 
 def tag_smileys(text: str) -> List[Annotation]:
@@ -216,10 +214,6 @@ def tag_smileys(text: str) -> List[Annotation]:
     if ":" not in text and ";" not in text:
         return []
     return regex_tag(text, _SMILEY_PATTERN, SMILEY_TAG)
-
-
-def tag_twitter(text: str) -> List[Annotation]:
-    return regex_tag(text, _TWITTER_PATTERN, TWITTER_TAG)
 
 
 # ---------------------------------------------------------------------------

@@ -43,7 +43,9 @@ _TEXTS = [
 def _inputs(spark):
     transcripts = spark.createDataFrame(
         [("c%d" % i, j, "user", t, None, None)
-         for i, t in enumerate(_TEXTS) for j in (0, 1)],
+         for i, t in enumerate(_TEXTS) for j in (0, 1)]
+        # a null-text turn: both extract paths must skip it
+        + [("c_null", 0, "user", None, None, None)],
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp")
     entity_dict = spark.createDataFrame(_DICT,

@@ -2,6 +2,7 @@
 
 import shutil
 
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -142,6 +143,10 @@ def test_pipeline_checkpoint_resume(spark, transcripts, tmp_path):
     assert second.buckets_computed == 0
     assert second.triples.count() == count_first
     assert second.lineage.count() == 4
+    # bucket-wise output == the one-shot run, row for row
+    one_shot = run_pipeline(spark, df).triples
+    assert sorted(map(tuple, second.triples.collect())) \
+        == sorted(map(tuple, one_shot.collect()))
     shutil.rmtree(out)
 
 
@@ -172,7 +177,9 @@ def test_pattern_induction_loop(spark):
     from palladian_spark.data.transcripts import synthetic_transcripts_pdf
 
     tp, _gold = synthetic_transcripts_pdf(n_convs=6, turns_per_conv=4)
-    t = spark.createDataFrame(tp)
+    # a null-text turn: mining and extraction must skip it
+    null_turn = tp.iloc[:1].assign(conv_id="c_null", text=None)
+    t = spark.createDataFrame(pd.concat([tp, null_turn], ignore_index=True))
     model = default_model()
 
     mined = mine_patterns_df(t, model, min_count=2)
