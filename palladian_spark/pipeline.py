@@ -11,6 +11,12 @@ triples AND a lineage row (bucket, stage, row_count, checksum).  Resume =
 anti-join the bucket list against completed lineage rows — only missing
 buckets are recomputed.  At cluster scale buckets map 1:1 onto Iceberg
 partitions; parquet subdirectories model that here.
+
+Per run, the dictionary is collected and broadcast with the model ONCE
+(relations.prepare_canonical_extraction); each bucket only applies the
+prepared stage to its slice.  A bucket's lineage row_count and checksum
+are observed on its triples write (``DataFrame.observe``): one pass, no
+cached copy, and the lineage describes exactly the rows written.
 """
 
 from __future__ import annotations
@@ -20,13 +26,13 @@ import time
 from dataclasses import dataclass
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from palladian_spark.data.transcripts import entity_dictionary_pdf
 from palladian_spark.ner.model import NerModel
 from palladian_spark.ner.train import build_annotation_dictionary, build_entity_dictionary
 from palladian_spark.relations import (
-    DEFAULT_PATTERNS, extract_canonical_triples,
+    DEFAULT_PATTERNS, prepare_canonical_extraction,
 )
 from palladian_spark.textproc.taggers import Annotation
 
@@ -69,7 +75,13 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
                  drop_unlinked: bool = False) -> PipelineResult:
     """Run the full pipeline.  With ``output_dir`` set, runs bucket-wise with
     lineage and resumes from completed buckets; without it, runs in one shot
-    and returns the triples DataFrame lazily."""
+    and returns the triples DataFrame lazily.
+
+    The dictionary is collected and broadcast (with the model) once per
+    run, not per bucket; each bucket then costs its extraction stage and
+    its write.  A bucket's lineage row_count and checksum are observed on
+    that write (``DataFrame.observe``), so they describe exactly the rows
+    written, with no cached copy and no extra pass."""
     t0 = time.time()
     model = model or default_model()
     if entity_dict is None:
@@ -77,18 +89,18 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
             entity_dictionary_pdf().assign(
                 entity_id=lambda d: d["concept"].str.lower() + ":" + d["surface"]))
 
-    def compute(df: DataFrame) -> DataFrame:
+    def prepare():
         # fused single-pass extraction+linking (the broadcastable-dict
         # default; extract_canonical_triples docstring has the trade-off
         # vs the staged mapping-first shape, which canonicalize_triples
         # keeps for huge alias dictionaries)
-        return extract_canonical_triples(df, model, entity_dict,
-                                         patterns=patterns,
-                                         min_link_sim=min_link_sim,
-                                         drop_unlinked=drop_unlinked)
+        return prepare_canonical_extraction(model, entity_dict,
+                                            patterns=patterns,
+                                            min_link_sim=min_link_sim,
+                                            drop_unlinked=drop_unlinked)
 
     if output_dir is None:
-        return PipelineResult(compute(transcripts), None, 0, time.time() - t0)
+        return PipelineResult(prepare()(transcripts), None, 0, time.time() - t0)
 
     triples_dir = os.path.join(output_dir, "triples")
     lineage_dir = os.path.join(output_dir, "lineage")
@@ -101,15 +113,15 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
     bucketed = transcripts.withColumn(
         "_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"))
     todo = sorted(set(range(n_buckets)) - done)
-    computed = 0
+    extract = prepare() if todo else None
     for bucket in todo:
         part = bucketed.where(F.col("_bucket") == bucket).drop("_bucket")
-        result = compute(part).cache()
-        row_count = result.count()
-        checksum = (result.select(
+        obs = Observation()
+        result = extract(part).observe(
+            obs, F.count(F.lit(1)).alias("row_count"),
             F.sum(F.pmod(F.xxhash64("conv_id", "turn_idx", "subj", "pred",
                                     "obj"), F.lit(1_000_000_007)))
-            .alias("c")).collect()[0]["c"]) or 0
+            .alias("checksum"))
         # each bucket OVERWRITES its own partition directory, so a crash
         # between the triples write and the lineage append cannot duplicate
         # rows on resume — the rerun replaces the orphan output (idempotent
@@ -117,13 +129,13 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
         # this is a REPLACE PARTITION commit)
         result.write.mode("overwrite").parquet(
             os.path.join(triples_dir, f"bucket={bucket}"))
+        metrics = obs.get
         lineage_row = spark.createDataFrame(
-            [(bucket, "triples", row_count, int(checksum), time.time())],
+            [(bucket, "triples", metrics["row_count"],
+              metrics["checksum"] or 0, time.time())],
             "bucket int, stage string, row_count long, checksum long, finished_at double")
         lineage_row.write.mode("append").parquet(lineage_dir)
-        result.unpersist()
-        computed += 1
 
     triples = spark.read.parquet(triples_dir).drop("bucket")
     lineage = spark.read.parquet(lineage_dir)
-    return PipelineResult(triples, lineage, computed, time.time() - t0)
+    return PipelineResult(triples, lineage, len(todo), time.time() - t0)

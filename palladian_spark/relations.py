@@ -15,11 +15,12 @@ has an inter-mention window that fully matches a predicate pattern.
 
 from __future__ import annotations
 
-from typing import Iterator, List, NamedTuple, Optional, Sequence
+from typing import Callable, Iterator, List, NamedTuple, Optional, Sequence
 
 import pandas as pd
 import regex
 
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
     DoubleType, IntegerType, StringType, StructField, StructType,
@@ -146,18 +147,17 @@ def triples_from_mentions(text: str, mentions: Sequence[ClassifiedAnnotation],
     return out
 
 
-def _extract(transcripts: DataFrame, model: NerModel,
+def _extract(transcripts: DataFrame, model_bc: Broadcast,
              patterns: Sequence[PredicatePattern],
              make_linker=None, drop_unlinked: bool = False) -> DataFrame:
     """The one triple-extraction stage: text → NER chain → sentence pairing
     → triples (→ linked surfaces, when ``make_linker`` builds a worker-side
-    ``link(surface) -> canonical-or-None``) in ONE Arrow-batched stage
-    (model + patterns broadcast).  The input is salted-repartitioned to
+    ``link(surface) -> canonical-or-None``) in ONE Arrow-batched stage over
+    the broadcast model ``model_bc``.  The input is salted-repartitioned to
     full parallelism first — the stage is Python-CPU-bound, so it must
     never inherit a coalesced 1-partition plan from a small upstream join."""
     from palladian_spark.operators.mentions import ensure_map_parallelism
     transcripts = ensure_map_parallelism(transcripts)
-    model_bc = transcripts.sparkSession.sparkContext.broadcast(model)
     patterns = list(patterns)
     cols = TRIPLE_SCHEMA.fieldNames()
 
@@ -218,7 +218,46 @@ def extract_triples(transcripts: DataFrame, model: NerModel,
                     ) -> DataFrame:
     """Raw (unlinked, undeduplicated) triples: the extraction stage with no
     linker — the input of the staged canonicalize_triples."""
-    return _extract(transcripts, model, patterns)
+    model_bc = transcripts.sparkSession.sparkContext.broadcast(model)
+    return _extract(transcripts, model_bc, patterns)
+
+
+def prepare_canonical_extraction(
+        model: NerModel, entity_dict: DataFrame,
+        patterns: Sequence[PredicatePattern] = tuple(DEFAULT_PATTERNS),
+        metric: str = "jaro_winkler", threshold: float = 0.9,
+        min_link_sim: Optional[float] = None,
+        drop_unlinked: bool = False) -> Callable[[DataFrame], DataFrame]:
+    """The prepare half of extract_canonical_triples: collect the dictionary
+    and broadcast it and the model ONCE, and return the apply step
+    ``transcripts → deduped canonical triples``.  A caller that extracts
+    many slices against one dictionary (run_pipeline's buckets) prepares
+    once and applies per slice, so each slice costs only its own stage
+    and the workers keep the deserialized broadcasts."""
+    from palladian_spark.linking import make_surface_linker
+    sc = entity_dict.sparkSession.sparkContext
+    # dictionary-side structures, built ONCE on the driver with the SAME
+    # Spark-side normalization as the staged path
+    norm_map = {r["_key"]: r["_canon"]
+                for r in _normalized_dictionary(entity_dict).collect()}
+    entries = ([(r["entity_id"], r["surface"], r["concept"]) for r in
+                entity_dict.select("entity_id", "surface", "concept")
+                .collect()]
+               if fuzzy_enabled(metric) else [])
+    link_bc = sc.broadcast((norm_map, entries))
+    model_bc = sc.broadcast(model)
+    patterns = list(patterns)
+
+    def make_linker():
+        norm_map_w, entries_w = link_bc.value
+        return make_surface_linker(norm_map_w, entries_w, metric, threshold,
+                                   min_link_sim)
+
+    def apply(transcripts: DataFrame) -> DataFrame:
+        return _dedup_triples(_extract(transcripts, model_bc, patterns,
+                                       make_linker, drop_unlinked))
+
+    return apply
 
 
 def extract_canonical_triples(transcripts: DataFrame, model: NerModel,
@@ -232,7 +271,8 @@ def extract_canonical_triples(transcripts: DataFrame, model: NerModel,
     relation patterns AND entity linking all run in ONE Arrow-batched
     stage; only the final per-(conv, turn, s, p, o) dedup aggregation
     shuffles.  Output-identical to the staged pair (equivalence-tested,
-    tests/test_fused_canonicalize.py).
+    tests/test_fused_canonicalize.py).  Equals
+    ``prepare_canonical_extraction(model, entity_dict, ...)(transcripts)``.
 
     Scale trade-off vs the staged mapping-first shape
     (canonicalize_triples): staged pays a full persist of the raw triple
@@ -244,25 +284,9 @@ def extract_canonical_triples(transcripts: DataFrame, model: NerModel,
     vocabulary) with ZERO extra passes over the stream — right when the
     dictionary is model-sized, which is the pipeline default
     (measured: kg_triples 13.6 → ~9.5 s at sf0.1 local[32])."""
-    from palladian_spark.linking import make_surface_linker
-    spark = transcripts.sparkSession
-    # dictionary-side structures, built ONCE on the driver with the SAME
-    # Spark-side normalization as the staged path
-    norm_map = {r["_key"]: r["_canon"]
-                for r in _normalized_dictionary(entity_dict).collect()}
-    entries = ([(r["entity_id"], r["surface"], r["concept"]) for r in
-                entity_dict.select("entity_id", "surface", "concept")
-                .collect()]
-               if fuzzy_enabled(metric) else [])
-    link_bc = spark.sparkContext.broadcast((norm_map, entries))
-
-    def make_linker():
-        norm_map_w, entries_w = link_bc.value
-        return make_surface_linker(norm_map_w, entries_w, metric, threshold,
-                                   min_link_sim)
-
-    return _dedup_triples(_extract(transcripts, model, patterns,
-                                   make_linker, drop_unlinked))
+    return prepare_canonical_extraction(
+        model, entity_dict, patterns, metric, threshold, min_link_sim,
+        drop_unlinked)(transcripts)
 
 
 def canonicalize_triples(triples: DataFrame, entity_dict: DataFrame,

@@ -29,7 +29,7 @@ from __future__ import annotations
 import time
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
                      "text string, tool string, ts timestamp")
@@ -67,10 +67,10 @@ def run_incremental_pipeline(spark: SparkSession, input_dir: str,
         # jobs or stream persists — the micro-batch latency win is larger
         # than in batch mode; equivalence pinned by
         # tests/test_fused_canonicalize.py)
-        triples = extract_canonical_triples(batch_df, model, entity_dict,
-                                            patterns=patterns)
-        triples = triples.persist()
-        n = triples.count()
+        obs = Observation()
+        triples = (extract_canonical_triples(batch_df, model, entity_dict,
+                                             patterns=patterns)
+                   .observe(obs, F.count(F.lit(1)).alias("n")))
         # idempotent sink: each micro-batch OVERWRITES its own partition
         # directory, so a retried/replayed batch_id (driver crash before
         # the checkpoint commit) replaces its half-written output instead
@@ -78,8 +78,9 @@ def run_incremental_pipeline(spark: SparkSession, input_dir: str,
         # recipe (same pattern as pipeline.run_pipeline's bucket dirs)
         triples.write.mode("overwrite").parquet(
             f"{triples_dir}/batch={int(batch_id)}")
+        # the row count is observed on the write: no persist, no extra pass
         lineage = spark.createDataFrame(
-            [(int(batch_id), "triples", n, time.time())],
+            [(int(batch_id), "triples", obs.get["n"], time.time())],
             "batch_id long, stage string, row_count long, finished_at double")
         # lineage gets the same per-batch overwrite as the triples: a
         # replayed batch_id (crash between parquet write and checkpoint
@@ -89,7 +90,6 @@ def run_incremental_pipeline(spark: SparkSession, input_dir: str,
         # before resuming — parquet refuses mixed flat/partitioned dirs
         lineage.write.mode("overwrite").parquet(
             f"{lineage_dir}/batch={int(batch_id)}")
-        triples.unpersist()
 
     stream = stream_transcripts(spark, input_dir)
     writer = (stream.writeStream

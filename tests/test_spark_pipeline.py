@@ -1,5 +1,7 @@
 """Spark integration tests: operators, pipeline, lineage/resume, P/R gate."""
 
+import glob
+import os
 import shutil
 
 import pandas as pd
@@ -132,11 +134,31 @@ def test_generated_transcripts_pr(spark):
     assert prf.recall >= 0.95
 
 
+def _assert_lineage_matches_data(spark, out):
+    """Every lineage row describes exactly its bucket's written parquet:
+    row_count is the bucket's row count and checksum the same
+    sum(pmod(xxhash64(...))) recomputed from the files.  Returns the
+    lineage as {bucket: (row_count, checksum)}."""
+    actual = {r["bucket"]: (r["n"], r["c"]) for r in
+              spark.read.parquet(f"{out}/triples").groupBy("bucket")
+              .agg(F.count(F.lit(1)).alias("n"),
+                   F.sum(F.pmod(F.xxhash64("conv_id", "turn_idx", "subj",
+                                           "pred", "obj"),
+                                F.lit(1_000_000_007))).alias("c"))
+              .collect()}
+    lineage = {r["bucket"]: (r["row_count"], r["checksum"])
+               for r in spark.read.parquet(f"{out}/lineage").collect()}
+    for bucket, got in lineage.items():
+        assert got == actual.get(bucket, (0, 0)), bucket
+    return lineage
+
+
 def test_pipeline_checkpoint_resume(spark, transcripts, tmp_path):
     df, gold = transcripts
     out = str(tmp_path / "kg")
     first = run_pipeline(spark, df, output_dir=out, n_buckets=4)
     assert first.buckets_computed == 4
+    assert sorted(_assert_lineage_matches_data(spark, out)) == [0, 1, 2, 3]
     count_first = first.triples.count()
     # resume: nothing left to do, same output
     second = run_pipeline(spark, df, output_dir=out, n_buckets=4)
@@ -148,6 +170,61 @@ def test_pipeline_checkpoint_resume(spark, transcripts, tmp_path):
     assert sorted(map(tuple, second.triples.collect())) \
         == sorted(map(tuple, one_shot.collect()))
     shutil.rmtree(out)
+
+
+def test_pipeline_empty_and_sparse_buckets(spark, transcripts, tmp_path):
+    """A bucket with no rows still completes: its lineage row is
+    (row_count 0, checksum 0), so the metrics observed on an empty write
+    must arrive."""
+    df, _ = transcripts
+    empty = run_pipeline(spark, df.limit(0), output_dir=str(tmp_path / "e"),
+                         n_buckets=4)
+    assert empty.buckets_computed == 4
+    assert empty.triples.count() == 0
+    assert sorted((r["bucket"], r["row_count"], r["checksum"])
+                  for r in empty.lineage.collect()) \
+        == [(b, 0, 0) for b in range(4)]
+
+    # more buckets than conversations: at least n_buckets - 3 are empty
+    convs = sorted(r["conv_id"] for r in
+                   df.select("conv_id").distinct().collect())[:3]
+    few = df.where(F.col("conv_id").isin(convs))
+    out = str(tmp_path / "s")
+    sparse = run_pipeline(spark, few, output_dir=out, n_buckets=8)
+    assert sparse.buckets_computed == 8
+    lineage = _assert_lineage_matches_data(spark, out)
+    assert sorted(lineage) == list(range(8))
+    assert sum(v == (0, 0) for v in lineage.values()) >= 5
+    assert sorted(map(tuple, sparse.triples.collect())) \
+        == sorted(map(tuple, run_pipeline(spark, few).triples.collect()))
+
+
+def test_pipeline_resume_after_crash_before_lineage(spark, transcripts,
+                                                    tmp_path):
+    """A crash between a bucket's triples write and its lineage append
+    leaves an orphan triples directory.  The rerun recomputes only that
+    bucket and overwrites the orphan: no duplicated or lost rows."""
+    df, _ = transcripts
+    out = str(tmp_path / "kg")
+    run_pipeline(spark, df, output_dir=out, n_buckets=4)
+    lineage = _assert_lineage_matches_data(spark, out)
+    lost = max(lineage, key=lambda b: lineage[b][0])
+    assert lineage[lost][0] > 0   # the orphan holds rows a rerun could duplicate
+    # drop the lineage part file holding that bucket's row (one row per file)
+    lineage_dir = os.path.join(out, "lineage")
+    parts = [f for f in glob.glob(os.path.join(lineage_dir, "part-*.parquet"))
+             if lost in set(pd.read_parquet(f)["bucket"])]
+    assert len(parts) == 1
+    assert set(pd.read_parquet(parts[0])["bucket"]) == {lost}
+    os.remove(parts[0])
+    assert os.path.isdir(os.path.join(out, "triples", f"bucket={lost}"))
+
+    rerun = run_pipeline(spark, df, output_dir=out, n_buckets=4)
+    assert rerun.buckets_computed == 1
+    assert _assert_lineage_matches_data(spark, out) == lineage
+    one_shot = run_pipeline(spark, df).triples
+    assert sorted(map(tuple, rerun.triples.collect())) \
+        == sorted(map(tuple, one_shot.collect()))
 
 
 def test_mention_evaluation_scores(spark):
