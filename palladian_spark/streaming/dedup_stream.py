@@ -18,9 +18,11 @@ every micro-batch is idempotent — the streaming twin of
      (crash before the checkpoint commit) replaces its half-written
      output instead of duplicating it.
 
-The base read for batch N is ``survivors/batch=* WHERE batch < N`` — a
-retried batch never sees its own partial output, which is what makes the
-replay idempotent WITHOUT a transactional table format.
+The base read for batch N is the COMMITTED ``survivors`` partitions below
+N (those with a ``_SUCCESS`` marker, empty ones included;
+``streaming/store.py``) — a retried batch never sees its own partial
+output, which is what makes the replay idempotent WITHOUT a
+transactional table format.
 
 Scale notes: micro-batch size is bounded by ``maxFilesPerTrigger``; the
 expensive pair work is batch×batch (tiny) and batch×base via banded LSH
@@ -35,7 +37,9 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from pyspark.sql.utils import AnalysisException
+
+from palladian_spark.streaming.store import (committed_batches,
+                                             read_batches, write_batch)
 
 
 def _dedup_batch(batch: DataFrame, batch_id: int, base: Optional[DataFrame],
@@ -117,31 +121,23 @@ def run_streaming_dedup(spark: SparkSession, input_dir: str,
     checkpoint_dir = f"{output_dir}/_checkpoint"
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            base = (spark.read.option("basePath", survivors_dir)
-                    .parquet(f"{survivors_dir}/batch=*")
-                    .where(F.col("batch") < int(batch_id))
-                    .select(id_col, text_col))
-            if not base.take(1):
-                base = None
-        except AnalysisException:
-            base = None
+        bid = int(batch_id)
+        base = read_batches(spark, survivors_dir,
+                            [b for b in committed_batches(survivors_dir)
+                             if b < bid])
         batch_df = batch_df.persist()
         survivors, decisions = _dedup_batch(
-            batch_df, int(batch_id), base, id_col, text_col, threshold)
+            batch_df, bid, base, id_col, text_col, threshold)
         survivors = survivors.persist()
         decisions = decisions.persist()
         n_in = batch_df.count()
         n_kept = survivors.count()
-        survivors.write.mode("overwrite").parquet(
-            f"{survivors_dir}/batch={int(batch_id)}")
-        decisions.write.mode("overwrite").parquet(
-            f"{decisions_dir}/batch={int(batch_id)}")
-        spark.createDataFrame(
-            [(int(batch_id), n_in, n_kept, time.time())],
-            "batch_id long, n_in long, n_kept long, finished_at double"
-        ).write.mode("overwrite").parquet(
-            f"{lineage_dir}/batch={int(batch_id)}")
+        write_batch(survivors, survivors_dir, bid)
+        write_batch(decisions, decisions_dir, bid)
+        write_batch(spark.createDataFrame(
+            [(bid, n_in, n_kept, time.time())],
+            "batch_id long, n_in long, n_kept long, finished_at double"),
+            lineage_dir, bid)
         for df in (survivors, decisions, batch_df):
             df.unpersist()
 

@@ -31,6 +31,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from palladian_spark.streaming.store import write_batch
+
 TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
                      "text string, tool string, ts timestamp")
 
@@ -76,8 +78,7 @@ def run_incremental_pipeline(spark: SparkSession, input_dir: str,
         # the checkpoint commit) replaces its half-written output instead
         # of appending duplicates — foreachBatch's documented exactly-once
         # recipe (same pattern as pipeline.run_pipeline's bucket dirs)
-        triples.write.mode("overwrite").parquet(
-            f"{triples_dir}/batch={int(batch_id)}")
+        write_batch(triples, triples_dir, batch_id)
         # the row count is observed on the write: no persist, no extra pass
         lineage = spark.createDataFrame(
             [(int(batch_id), "triples", obs.get["n"], time.time())],
@@ -88,8 +89,7 @@ def run_incremental_pipeline(spark: SparkSession, input_dir: str,
         # LAYOUT NOTE: round 1 wrote flat appended files here; an
         # output_dir from that era must be migrated (or started fresh)
         # before resuming — parquet refuses mixed flat/partitioned dirs
-        lineage.write.mode("overwrite").parquet(
-            f"{lineage_dir}/batch={int(batch_id)}")
+        write_batch(lineage, lineage_dir, batch_id)
 
     stream = stream_transcripts(spark, input_dir)
     writer = (stream.writeStream

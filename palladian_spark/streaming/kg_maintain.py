@@ -35,9 +35,10 @@ this module maintains what a KG consumer actually reads — per batch:
                     pinned across drains, replays, and late data.
 
 Idempotency: every output is OVERWRITE of its own ``batch=N`` directory
-and every base read filters ``batch < N``, so a replayed batch id (crash
-before the checkpoint commit) replaces its half-written output and never
-sees it as history — exactly-once without a transactional format.
+and every base read takes the COMMITTED partitions below N (those with a
+``_SUCCESS`` marker, empty ones included; ``streaming/store.py``), so a
+replayed batch id (crash before the checkpoint commit) replaces its
+half-written output and never sees it as history.
 
 Late data: with ``lateness_horizon_sec`` set, each batch is split against
 the running watermark (max event ``ts`` over all EARLIER batches, minus
@@ -63,41 +64,17 @@ from __future__ import annotations
 import time
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.utils import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from palladian_spark.streaming.incremental import stream_transcripts
+from palladian_spark.streaming.store import (committed_batches,
+                                             compact_batches, read_batches,
+                                             write_batch)
 
 
-def _read_partitioned(spark: SparkSession, base_dir: str,
-                      before_batch: int) -> Optional[DataFrame]:
-    """``<base_dir>/batch=*`` rows with batch < before_batch, or None if
-    the store does not exist yet / has no earlier batches."""
-    try:
-        df = (spark.read.option("basePath", base_dir)
-              .parquet(f"{base_dir}/batch=*")
-              .where(F.col("batch") < int(before_batch)))
-        if not df.take(1):
-            return None
-        return df
-    except AnalysisException:
-        return None
-
-
-def _store_at(spark: SparkSession, base_dir: str,
-              batch: int) -> Optional[DataFrame]:
-    """One store's ``batch=<batch>`` partition, or None if the store (or
-    that partition) does not exist — the upgrade path for stores written
-    before a new per-batch artifact was added."""
-    try:
-        df = (spark.read.option("basePath", base_dir)
-              .parquet(f"{base_dir}/batch=*")
-              .where(F.col("batch") == int(batch)))
-        if not df.take(1):
-            return None
-        return df
-    except AnalysisException:
-        return None
+def _read_all(spark: SparkSession, base: str) -> Optional[DataFrame]:
+    """Every committed partition of one store (None when it has none)."""
+    return read_batches(spark, base, committed_batches(base))
 
 
 def _maintain_batch(spark: SparkSession, triples: DataFrame, batch_id: int,
@@ -123,72 +100,64 @@ def _maintain_batch(spark: SparkSession, triples: DataFrame, batch_id: int,
 
     t = triples.select("subj", "pred", "obj").persist()
 
+    # the lineage counts are observed on the writes: no extra Spark jobs
+    ev_obs, edges_obs, deg_obs = Observation(), Observation(), Observation()
     evidence = (t.groupBy("subj", "pred", "obj")
                 .agg(F.count(F.lit(1)).cast("long").alias("n_obs")))
-    evidence.write.mode("overwrite").parquet(f"{evidence_dir}/batch={bid}")
+    write_batch(evidence.observe(ev_obs, F.sum("n_obs").alias("n")),
+                evidence_dir, bid)
 
-    batch_edges = t.select("subj", "pred", "obj").distinct()
-    known = _read_partitioned(spark, edges_dir, bid)
+    new_edges = t.distinct()
+    known = read_batches(spark, edges_dir,
+                         [b for b in committed_batches(edges_dir) if b < bid])
     if known is not None:
-        new_edges = batch_edges.join(
-            known.select("subj", "pred", "obj"),
-            ["subj", "pred", "obj"], "left_anti")
-    else:
-        new_edges = batch_edges
+        new_edges = new_edges.join(known.select("subj", "pred", "obj"),
+                                   ["subj", "pred", "obj"], "left_anti")
     new_edges = new_edges.persist()
-    n_new = new_edges.count()
-    new_edges.write.mode("overwrite").parquet(f"{edges_dir}/batch={bid}")
+    write_batch(new_edges.observe(edges_obs, F.count(F.lit(1)).alias("n")),
+                edges_dir, bid)
 
-    empty_labels = spark.createDataFrame([], "node string, component string")
-    prev_lineage = _read_partitioned(spark, lineage_dir, bid)
-    if prev_lineage is not None:
-        prev_bid = prev_lineage.agg(F.max("batch")).first()[0]
-        prev_degrees = (spark.read.option("basePath", degrees_dir)
-                        .parquet(f"{degrees_dir}/batch=*")
-                        .where(F.col("batch") == int(prev_bid))
-                        .select("node", "out_degree", "in_degree"))
-        prev_comp = _store_at(spark, components_dir, prev_bid)
-        if prev_comp is not None:
-            prev_comp = prev_comp.select("node", "component")
+    prev_degrees = spark.createDataFrame(
+        [], "node string, out_degree long, in_degree long")
+    prev_comp = spark.createDataFrame([], "node string, component string")
+    earlier = [b for b in committed_batches(lineage_dir) if b < bid]
+    if earlier:
+        prev_bid = max(earlier)
+        prev_degrees = read_batches(spark, degrees_dir, [prev_bid]) \
+            .select("node", "out_degree", "in_degree")
+        if prev_bid in committed_batches(components_dir):
+            prev_comp = read_batches(spark, components_dir, [prev_bid]) \
+                .select("node", "component")
         elif known is not None:
             # store predates the component twin: bootstrap ONCE from the
             # novel-edge store, which holds every distinct edge ever seen
             prev_comp = connected_components(
                 known.select(F.col("subj").alias("a_id"),
                              F.col("obj").alias("b_id")))
-        else:
-            prev_comp = empty_labels
-    else:
-        prev_degrees = spark.createDataFrame(
-            [], "node string, out_degree long, in_degree long")
-        prev_comp = empty_labels
     diff = new_edges.select("subj", "obj", F.lit("added").alias("status"))
     degrees = (apply_degree_delta(prev_degrees, diff)
                .select("node", F.col("out_degree").cast("long").alias("out_degree"),
                        F.col("in_degree").cast("long").alias("in_degree")))
-    degrees = degrees.persist()
-    n_nodes = degrees.count()
-    degrees.write.mode("overwrite").parquet(f"{degrees_dir}/batch={bid}")
+    write_batch(degrees.observe(deg_obs, F.count(F.lit(1)).alias("n")),
+                degrees_dir, bid)
 
     components = apply_component_delta(
         prev_comp, new_edges.select(F.col("subj").alias("a_id"),
                                     F.col("obj").alias("b_id")))
-    components.write.mode("overwrite") \
-        .parquet(f"{components_dir}/batch={bid}")
+    write_batch(components, components_dir, bid)
 
-    row = {"batch_id": bid, "n_triples": t.count(), "n_new_edges": n_new,
-           "n_nodes": n_nodes, "n_late": int(n_late),
+    row = {"batch_id": bid, "n_triples": ev_obs.get["n"] or 0,
+           "n_new_edges": edges_obs.get["n"], "n_nodes": deg_obs.get["n"],
+           "n_late": int(n_late),
            "max_event_ts": (None if max_event_ts is None
                             else float(max_event_ts)),
            "finished_at": time.time()}
-    spark.createDataFrame(
-        [(row["batch_id"], row["n_triples"], row["n_new_edges"],
-          row["n_nodes"], row["n_late"], row["max_event_ts"],
-          row["finished_at"])],
+    write_batch(spark.createDataFrame(
+        [tuple(row.values())],
         "batch_id long, n_triples long, n_new_edges long, n_nodes long, "
-        "n_late long, max_event_ts double, finished_at double") \
-        .write.mode("overwrite").parquet(f"{lineage_dir}/batch={bid}")
-    for df in (degrees, new_edges, t):
+        "n_late long, max_event_ts double, finished_at double"),
+        lineage_dir, bid)
+    for df in (new_edges, t):
         df.unpersist()
     return row
 
@@ -199,8 +168,9 @@ def _current_watermark(spark: SparkSession, output_dir: str,
     """Watermark (epoch seconds) in force for ``before_batch``: max event
     ts recorded by EARLIER batches minus the horizon; None while no
     earlier batch has recorded an event time."""
-    lineage = _read_partitioned(spark, f"{output_dir}/lineage",
-                                before_batch)
+    base = f"{output_dir}/lineage"
+    lineage = read_batches(spark, base, [b for b in committed_batches(base)
+                                         if b < before_batch])
     if lineage is None or "max_event_ts" not in lineage.columns:
         return None
     top = lineage.agg(F.max("max_event_ts")).first()[0]
@@ -244,12 +214,12 @@ def run_streaming_kg_maintenance(spark: SparkSession, input_dir: str,
                                     lateness_horizon_sec)
             if wm is not None:
                 is_late = F.col("ts").cast("double") < F.lit(wm)
-                late = batch_df.where(is_late).persist()
-                n_late = late.count()
-                late.write.mode("overwrite").parquet(
-                    f"{output_dir}/late_turns/batch={bid}")
+                late_obs = Observation()
+                write_batch(batch_df.where(is_late).observe(
+                    late_obs, F.count(F.lit(1)).alias("n")),
+                    f"{output_dir}/late_turns", bid)
+                n_late = late_obs.get["n"]
                 on_time = batch_df.where(~is_late | F.col("ts").isNull())
-                late.unpersist()
             else:
                 on_time = batch_df
         triples = extract_canonical_triples(on_time, model, entity_dict,
@@ -273,21 +243,16 @@ def run_streaming_kg_maintenance(spark: SparkSession, input_dir: str,
 def fold_evidence(spark: SparkSession, output_dir: str) -> DataFrame:
     """Consumer-side fold of the append-only evidence deltas: cumulative
     per-edge observation counts (one map-side-combinable agg)."""
-    return (spark.read.option("basePath", f"{output_dir}/evidence_delta")
-            .parquet(f"{output_dir}/evidence_delta/batch=*")
+    return (_read_all(spark, f"{output_dir}/evidence_delta")
             .groupBy("subj", "pred", "obj")
             .agg(F.sum("n_obs").cast("long").alias("n_obs")))
 
 
 def current_degrees(spark: SparkSession, output_dir: str) -> DataFrame:
     """The latest maintained degree profile."""
-    lineage = (spark.read.option("basePath", f"{output_dir}/lineage")
-               .parquet(f"{output_dir}/lineage/batch=*"))
-    last = lineage.agg(F.max("batch")).first()[0]
-    return (spark.read.option("basePath", f"{output_dir}/degrees")
-            .parquet(f"{output_dir}/degrees/batch=*")
-            .where(F.col("batch") == int(last))
-            .select("node", "out_degree", "in_degree"))
+    last = max(committed_batches(f"{output_dir}/lineage"))
+    return read_batches(spark, f"{output_dir}/degrees", [last]) \
+        .select("node", "out_degree", "in_degree")
 
 
 def current_components(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -297,14 +262,11 @@ def current_components(spark: SparkSession, output_dir: str) -> DataFrame:
     store (every distinct edge, by construction) — the same upgrade path
     ``_maintain_batch`` takes, so the next drain persists it."""
     from palladian_spark.graph import connected_components
-    lineage = (spark.read.option("basePath", f"{output_dir}/lineage")
-               .parquet(f"{output_dir}/lineage/batch=*"))
-    last = lineage.agg(F.max("batch")).first()[0]
-    comp = _store_at(spark, f"{output_dir}/components", int(last))
-    if comp is not None:
-        return comp.select("node", "component")
-    edges = (spark.read.option("basePath", f"{output_dir}/edges")
-             .parquet(f"{output_dir}/edges/batch=*"))
+    last = max(committed_batches(f"{output_dir}/lineage"))
+    base = f"{output_dir}/components"
+    if last in committed_batches(base):
+        return read_batches(spark, base, [last]).select("node", "component")
+    edges = _read_all(spark, f"{output_dir}/edges")
     return connected_components(
         edges.select(F.col("subj").alias("a_id"),
                      F.col("obj").alias("b_id")))
@@ -313,15 +275,10 @@ def current_components(spark: SparkSession, output_dir: str) -> DataFrame:
 def read_late_turns(spark: SparkSession, output_dir: str) -> Optional[DataFrame]:
     """All turns routed to the late-data correction store (None when the
     store doesn't exist or is empty)."""
-    base = f"{output_dir}/late_turns"
-    try:
-        df = (spark.read.option("basePath", base)
-              .parquet(f"{base}/batch=*"))
-        if not df.take(1):
-            return None
-        return df
-    except AnalysisException:
+    df = _read_all(spark, f"{output_dir}/late_turns")
+    if df is None or not df.take(1):
         return None
+    return df
 
 
 def reconciled_artifacts(spark: SparkSession, output_dir: str, model,
@@ -347,9 +304,8 @@ def reconciled_artifacts(spark: SparkSession, output_dir: str, model,
     from palladian_spark.relations import (
         DEFAULT_PATTERNS, extract_canonical_triples)
 
-    edges = (spark.read.option("basePath", f"{output_dir}/edges")
-             .parquet(f"{output_dir}/edges/batch=*")
-             .select("subj", "pred", "obj"))
+    edges = _read_all(spark, f"{output_dir}/edges") \
+        .select("subj", "pred", "obj")
     evidence = fold_evidence(spark, output_dir)
     degrees = current_degrees(spark, output_dir)
     components = current_components(spark, output_dir)
@@ -401,24 +357,5 @@ def compact_stores(spark: SparkSession, output_dir: str,
 
     Returns {store: n_batches_compacted}.
     """
-    import glob
-    import os
-    import shutil
-
-    result = {}
-    for store in stores:
-        base = f"{output_dir}/{store}"
-        parts = sorted(glob.glob(f"{base}/batch=*"))
-        if len(parts) <= 1:
-            result[store] = 0
-            continue
-        top = max(int(os.path.basename(p).split("=")[1]) for p in parts)
-        df = (spark.read.option("basePath", base)
-              .parquet(f"{base}/batch=*").drop("batch"))
-        tmp = f"{base}/_compact_tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        for p in parts:
-            shutil.rmtree(p)
-        os.rename(tmp, f"{base}/batch={top}")
-        result[store] = len(parts)
-    return result
+    return {store: compact_batches(spark, f"{output_dir}/{store}")
+            for store in stores}

@@ -49,6 +49,15 @@ def test_dedup_batch_kernel_stages(spark):
     assert dec["d1"] == ("kept", None) and dec["d4"] == ("kept", None)
     assert {r["doc_id"] for r in survivors.collect()} == {"d1", "d4"}
 
+    # an empty survivor store (a committed partition with no rows) decides
+    # exactly like no store at all
+    def outputs(base_df):
+        surv, dec = _dedup_batch(batch, 0, base_df, "doc_id", "text",
+                                 threshold=0.5)
+        return ({r["doc_id"] for r in surv.collect()},
+                {tuple(r) for r in dec.collect()})
+    assert outputs(spark.createDataFrame([], SCHEMA)) == outputs(None)
+
 
 def test_streaming_two_waves_and_checkpoint(spark, dirs):
     in_dir, out_dir = dirs

@@ -75,6 +75,45 @@ def test_maintain_batch_kernel(spark, tmp_path):
     assert comp == {n: "a" for n in "abcd"}
 
 
+def _assert_lineage_matches_stores(spark, out):
+    """Every lineage row counts what its batch wrote: n_triples = the
+    evidence partition's sum(n_obs), n_new_edges = the edge partition's
+    rows, n_nodes = the degree partition's rows."""
+    def per_batch(store, agg):
+        return {r["batch"]: r["v"] for r in spark.read.parquet(
+            f"{out}/{store}").groupBy("batch").agg(agg.alias("v")).collect()}
+    n_obs = per_batch("evidence_delta", F.sum("n_obs"))
+    n_edges = per_batch("edges", F.count(F.lit(1)))
+    n_nodes = per_batch("degrees", F.count(F.lit(1)))
+    for r in spark.read.parquet(f"{out}/lineage").collect():
+        b = r["batch_id"]
+        assert (r["n_triples"], r["n_new_edges"], r["n_nodes"]) == \
+            (n_obs.get(b, 0), n_edges.get(b, 0), n_nodes.get(b, 0))
+
+
+def test_maintain_batch_empty_first_batch(spark, tmp_path):
+    """Batch 0 has no triples: its partitions are committed but empty,
+    and the next batch reads them as history, not as a missing store."""
+    from palladian_spark.graph import kg_degrees
+    out = str(tmp_path / "out")
+    schema = "subj string, pred string, obj string"
+    row0 = _maintain_batch(spark, spark.createDataFrame([], schema), 0, out)
+    assert (row0["n_triples"], row0["n_new_edges"], row0["n_nodes"]) == \
+        (0, 0, 0)
+    assert _degree_map(current_degrees(spark, out)) == {}
+    assert _comp_map(current_components(spark, out)) == {}
+    t1 = spark.createDataFrame(
+        [("a", "p", "b"), ("a", "p", "b"), ("x", "p", "y")], schema)
+    row1 = _maintain_batch(spark, t1, 1, out)
+    assert (row1["n_triples"], row1["n_new_edges"], row1["n_nodes"]) == \
+        (3, 2, 4)
+    assert _degree_map(current_degrees(spark, out)) == \
+        _degree_map(kg_degrees(t1))
+    assert _comp_map(current_components(spark, out)) == \
+        _comp_map(_comp_recompute(t1))
+    _assert_lineage_matches_stores(spark, out)
+
+
 def test_maintain_batch_component_merge(spark, tmp_path):
     """Two disjoint components merged by a later batch's bridge edge —
     the incremental labeling must equal the full recompute."""
@@ -170,6 +209,7 @@ def test_streaming_matches_batch_recompute(spark, workdir):
         .parquet(f"{out_dir}/edges/batch=*")
     assert edges.count() == \
         full.select("subj", "pred", "obj").distinct().count()
+    _assert_lineage_matches_stores(spark, out_dir)
 
 
 def test_compact_stores_preserves_folds(spark, tmp_path):
@@ -261,6 +301,12 @@ def test_late_turns_routed_and_reconciled(spark, workdir):
                  for r in all_rows
                  .where(F.col("conv_id").startswith("w2late")).collect()}
     assert got_late == want_late
+    # each lineage row's n_late counts the rows its batch routed
+    routed = {r["batch"]: r["n"] for r in late.groupBy("batch")
+              .agg(F.count(F.lit(1)).alias("n")).collect()}
+    for r in spark.read.parquet(f"{out_dir}/lineage").collect():
+        assert r["n_late"] == routed.get(r["batch_id"], 0)
+    _assert_lineage_matches_stores(spark, out_dir)
 
     # main stores == batch recompute over the ON-TIME subset only
     on_time = all_rows.where(~F.col("conv_id").startswith("w2late"))
