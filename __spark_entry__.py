@@ -1933,7 +1933,9 @@ def _q_conversation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from palladian_spark.operators.events import conversation_stats
     return conversation_stats(_tpch_transcripts(spark, sf_dir)) \
         .select("conv_id", "n_turns", "n_user", "n_assistant",
-                "first_ts", "last_ts", "avg_chars")
+                F.col("first_ts").cast("date").alias("first_ts"),
+                F.col("last_ts").cast("date").alias("last_ts"),
+                "avg_chars")
 
 
 def _q_real_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4747,9 +4749,9 @@ UNION ALL SELECT 'ERROR5', CAST(0 AS BIGINT) FROM n
 SELECT conv_id, count(*) AS n_turns,
        sum(CASE WHEN ln % 2 <> 0 THEN 1 ELSE 0 END) AS n_user,
        sum(CASE WHEN ln % 2 = 0 THEN 1 ELSE 0 END) AS n_assistant,
-       min(ts) AS first_ts, max(ts) AS last_ts,
-       round(CAST(sum(length(cust) + length(supp) + length(nat) + 16)
-                  AS DOUBLE) / count(*), 4)
+       CAST(min(ts) AS DATE) AS first_ts, CAST(max(ts) AS DATE) AS last_ts,
+       CAST(round(CAST(sum(length(cust) + length(supp) + length(nat) + 16)
+                       AS DOUBLE) * 10000 / count(*)) AS BIGINT)
          AS avg_chars
 FROM base GROUP BY 1
 """,

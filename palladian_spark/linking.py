@@ -56,7 +56,8 @@ _LINK_MISS = object()
 
 
 def make_surface_linker(norm_map, entries, metric: str, threshold: float,
-                        min_link_sim: Optional[float] = None):
+                        min_link_sim: Optional[float] = None,
+                        index_key: Optional[str] = None):
     """Per-worker memoized ``link(value) -> canonical-or-None`` with the
     EXACT semantics of the staged mapping (canonicalize_triples): exact
     hit on the normalized key (link_sim 1.0) first, else the blocked
@@ -65,11 +66,16 @@ def make_surface_linker(norm_map, entries, metric: str, threshold: float,
     bar.  ``norm_map`` is {normalized key: min(surface)} and must be
     computed by the SAME normalization as the staged path (the callers
     build it with the Spark normalize_surface column so dictionary-side
-    normalization is literally shared)."""
+    normalization is literally shared).  With ``index_key`` the fuzzy
+    index comes from the per-worker cache (_worker_index), so every task
+    of one prepared plan on a worker shares one index; without it the
+    index is built here."""
     sim_fn = METRICS[metric] if entries else None
     frac = _bound_frac(metric, threshold) if entries else None
-    index = _BlockedDict(entries, metric) if (entries and frac is not None) \
-        else None
+    index = None
+    if entries and frac is not None:
+        index = (_worker_index(index_key, entries, metric)
+                 if index_key is not None else _BlockedDict(entries, metric))
     memo: dict = {}
 
     def link(value: str):
@@ -186,7 +192,27 @@ class _BlockedDict:
         return np.sort(self.order[lo:hi][keep])
 
 
-_INDEX_CACHE: dict = {}  # (plan_uuid) -> _BlockedDict, per Python worker
+# plan key -> _BlockedDict, one per Python worker process.  Reach it ONLY
+# through the top-level _worker_index: cloudpickle ships a nested function
+# (a mapInPandas closure) by value together with a fresh copy of the module
+# globals it names, so a closure that read this dict directly would see an
+# empty copy in every task.  A top-level function is shipped by reference
+# and resolves the worker's real module dict.
+_INDEX_CACHE: dict = {}
+
+
+def _worker_index(key: str, entries: List[Tuple[str, str, str]],
+                  metric: str) -> _BlockedDict:
+    """The worker's _BlockedDict for plan ``key``, built on first use."""
+    index = _INDEX_CACHE.get(key)
+    if index is None:
+        index = _BlockedDict(entries, metric)
+        if len(_INDEX_CACHE) > 8:
+            # evict ONE oldest entry — clearing everything would force
+            # still-running plans to rebuild per task
+            _INDEX_CACHE.pop(next(iter(_INDEX_CACHE)))
+        _INDEX_CACHE[key] = index
+    return index
 
 
 _FUZZY_SCHEMA = StructType([
@@ -220,16 +246,8 @@ def fuzzy_link_df(values: DataFrame, entity_dict: DataFrame,
 
     def fuzzy_match(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         entries = dict_bc.value
-        index = None
-        if frac is not None:
-            index = _INDEX_CACHE.get(plan_id)
-            if index is None:
-                index = _BlockedDict(entries, metric)
-                if len(_INDEX_CACHE) > 8:
-                    # evict ONE oldest entry — clearing everything would
-                    # force still-running plans to rebuild per task
-                    _INDEX_CACHE.pop(next(iter(_INDEX_CACHE)))
-                _INDEX_CACHE[plan_id] = index
+        index = (_worker_index(plan_id, entries, metric)
+                 if frac is not None else None)
         for pdf in iterator:
             out = {k: [] for k in
                    ("value", "entity_id", "canonical", "concept", "link_sim")}

@@ -103,7 +103,9 @@ def conversation_stats(transcripts: DataFrame) -> DataFrame:
     (conv_id, turn_idx, role, text, tool, ts — BASELINE input_hint):
     turn/role counts, time span, average turn length.  One map-side-
     combinable hash agg on conv_id — AQE skew handling covers hot
-    conversations."""
+    conversations.  ``avg_chars`` is the average non-null text length in
+    fixed point: round(avg * 10000) as a BIGINT, so no engine's double
+    formatting can change the value."""
     return (transcripts.groupBy("conv_id")
             .agg(F.count("*").alias("n_turns"),
                  F.sum((F.col("role") == "user").cast("long"))
@@ -118,8 +120,8 @@ def conversation_stats(transcripts: DataFrame) -> DataFrame:
                  # division is deterministic for any partitioning; the
                  # count("text") denominator keeps avg's null-skipping
                  # semantics (sum(length) skips nulls too).
-                 F.round(F.sum(F.length("text")).cast("double")
-                         / F.count("text"), 4).alias("avg_chars")))
+                 F.round(F.sum(F.length("text")).cast("double") * 10000
+                         / F.count("text")).cast("long").alias("avg_chars")))
 
 
 def user_activity(events: DataFrame) -> DataFrame:

@@ -14,9 +14,12 @@ partitions; parquet subdirectories model that here.
 
 Per run, the dictionary is collected and broadcast with the model ONCE
 (relations.prepare_canonical_extraction); each bucket only applies the
-prepared stage to its slice.  A bucket's lineage row_count and checksum
-are observed on its triples write (``DataFrame.observe``): one pass, no
-cached copy, and the lineage describes exactly the rows written.
+prepared stage to its slice, so a bucket costs its extraction stage, its
+write and one driver-local lineage row.  A bucket's lineage row_count and
+checksum are observed on its triples write (``DataFrame.observe``): one
+pass, no cached copy, and the lineage describes exactly the rows written.
+The lineage row is built on the driver (session.local_frame), so writing
+it runs no Python task.
 """
 
 from __future__ import annotations
@@ -34,6 +37,7 @@ from palladian_spark.ner.train import build_annotation_dictionary, build_entity_
 from palladian_spark.relations import (
     DEFAULT_PATTERNS, prepare_canonical_extraction,
 )
+from palladian_spark.session import local_frame
 from palladian_spark.textproc.taggers import Annotation
 
 
@@ -78,10 +82,11 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
     and returns the triples DataFrame lazily.
 
     The dictionary is collected and broadcast (with the model) once per
-    run, not per bucket; each bucket then costs its extraction stage and
-    its write.  A bucket's lineage row_count and checksum are observed on
-    that write (``DataFrame.observe``), so they describe exactly the rows
-    written, with no cached copy and no extra pass."""
+    run, not per bucket; each bucket then costs its extraction stage, its
+    write and one driver-local lineage row (no Python task).  A bucket's
+    lineage row_count and checksum are observed on that write
+    (``DataFrame.observe``), so they describe exactly the rows written,
+    with no cached copy and no extra pass."""
     t0 = time.time()
     model = model or default_model()
     if entity_dict is None:
@@ -130,9 +135,9 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
         result.write.mode("overwrite").parquet(
             os.path.join(triples_dir, f"bucket={bucket}"))
         metrics = obs.get
-        lineage_row = spark.createDataFrame(
-            [(bucket, "triples", metrics["row_count"],
-              metrics["checksum"] or 0, time.time())],
+        lineage_row = local_frame(
+            spark, [(bucket, "triples", metrics["row_count"],
+                     metrics["checksum"] or 0, time.time())],
             "bucket int, stage string, row_count long, checksum long, finished_at double")
         lineage_row.write.mode("append").parquet(lineage_dir)
 

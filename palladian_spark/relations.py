@@ -15,6 +15,7 @@ has an inter-mention window that fully matches a predicate pattern.
 
 from __future__ import annotations
 
+import uuid
 from typing import Callable, Iterator, List, NamedTuple, Optional, Sequence
 
 import pandas as pd
@@ -247,11 +248,13 @@ def prepare_canonical_extraction(
     link_bc = sc.broadcast((norm_map, entries))
     model_bc = sc.broadcast(model)
     patterns = list(patterns)
+    # one fuzzy index per Python worker for every slice this prepare applies
+    index_key = uuid.uuid4().hex
 
     def make_linker():
         norm_map_w, entries_w = link_bc.value
         return make_surface_linker(norm_map_w, entries_w, metric, threshold,
-                                   min_link_sim)
+                                   min_link_sim, index_key)
 
     def apply(transcripts: DataFrame) -> DataFrame:
         return _dedup_triples(_extract(transcripts, model_bc, patterns,

@@ -12,8 +12,10 @@ Explicit decisions (SURVEY.md §4):
 from __future__ import annotations
 
 import os
+from typing import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def default_parallelism() -> int:
@@ -50,3 +52,23 @@ def get_spark(app_name: str = "palladian-spark", master: str | None = None,
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Sequence],
+                ddl: str) -> DataFrame:
+    """A small driver-built DataFrame (e.g. a lineage row) that runs no
+    Python task.  ``spark.createDataFrame(<python list>, ddl)`` plans
+    ``Scan ExistingRDD``, a Python RDD over ``defaultParallelism`` slices,
+    and each of its tasks pays the Python worker's fixed set-up cost; a
+    ``pyarrow.Table`` plans a ``LocalTableScan`` instead.  Rows are tuples
+    in ``ddl`` column order; ``None`` reads back as null."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type)
+         for col, field in zip(columns, arrow_schema)], schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -38,6 +38,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from palladian_spark.session import local_frame
 from palladian_spark.streaming.store import (committed_batches,
                                              read_batches, write_batch)
 
@@ -134,8 +135,8 @@ def run_streaming_dedup(spark: SparkSession, input_dir: str,
         n_kept = survivors.count()
         write_batch(survivors, survivors_dir, bid)
         write_batch(decisions, decisions_dir, bid)
-        write_batch(spark.createDataFrame(
-            [(bid, n_in, n_kept, time.time())],
+        write_batch(local_frame(
+            spark, [(bid, n_in, n_kept, time.time())],
             "batch_id long, n_in long, n_kept long, finished_at double"),
             lineage_dir, bid)
         for df in (survivors, decisions, batch_df):

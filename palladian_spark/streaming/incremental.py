@@ -31,6 +31,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from palladian_spark.session import local_frame
 from palladian_spark.streaming.store import write_batch
 
 TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
@@ -80,8 +81,8 @@ def run_incremental_pipeline(spark: SparkSession, input_dir: str,
         # recipe (same pattern as pipeline.run_pipeline's bucket dirs)
         write_batch(triples, triples_dir, batch_id)
         # the row count is observed on the write: no persist, no extra pass
-        lineage = spark.createDataFrame(
-            [(int(batch_id), "triples", obs.get["n"], time.time())],
+        lineage = local_frame(
+            spark, [(int(batch_id), "triples", obs.get["n"], time.time())],
             "batch_id long, stage string, row_count long, finished_at double")
         # lineage gets the same per-batch overwrite as the triples: a
         # replayed batch_id (crash between parquet write and checkpoint

@@ -66,6 +66,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from palladian_spark.session import local_frame
 from palladian_spark.streaming.incremental import stream_transcripts
 from palladian_spark.streaming.store import (committed_batches,
                                              compact_batches, read_batches,
@@ -117,9 +118,9 @@ def _maintain_batch(spark: SparkSession, triples: DataFrame, batch_id: int,
     write_batch(new_edges.observe(edges_obs, F.count(F.lit(1)).alias("n")),
                 edges_dir, bid)
 
-    prev_degrees = spark.createDataFrame(
-        [], "node string, out_degree long, in_degree long")
-    prev_comp = spark.createDataFrame([], "node string, component string")
+    prev_degrees = local_frame(
+        spark, [], "node string, out_degree long, in_degree long")
+    prev_comp = local_frame(spark, [], "node string, component string")
     earlier = [b for b in committed_batches(lineage_dir) if b < bid]
     if earlier:
         prev_bid = max(earlier)
@@ -152,8 +153,8 @@ def _maintain_batch(spark: SparkSession, triples: DataFrame, batch_id: int,
            "max_event_ts": (None if max_event_ts is None
                             else float(max_event_ts)),
            "finished_at": time.time()}
-    write_batch(spark.createDataFrame(
-        [tuple(row.values())],
+    write_batch(local_frame(
+        spark, [tuple(row.values())],
         "batch_id long, n_triples long, n_new_edges long, n_nodes long, "
         "n_late long, max_event_ts double, finished_at double"),
         lineage_dir, bid)

@@ -15,6 +15,7 @@ from palladian_spark.linking import normalize_surface, normalize_surface_py
 from palladian_spark.pipeline import model_from_entity_dictionary
 from palladian_spark.relations import (
     canonicalize_triples, extract_canonical_triples, extract_triples,
+    prepare_canonical_extraction,
 )
 
 _DICT = [
@@ -101,6 +102,33 @@ def test_fused_links_fuzzy_and_keeps_unlinked(spark):
         transcripts, model, entity_dict, metric="none").collect()
     subjects_none = {r["subj"] for r in rows_none}
     assert "Anna Smyth" in subjects_none
+
+
+def test_prepared_extractions_do_not_share_worker_index(spark):
+    """Two prepares over different dictionaries, applied A, B, A on the
+    same workers: each keeps its own per-worker fuzzy index, so every
+    result equals a fresh (staged) run over its own dictionary."""
+    transcripts, dict_a, model = _inputs(spark)
+    # unrelated entries first, then near-miss surfaces: an index built
+    # over A's 6 entries would point B's fuzzy lookups at the fillers
+    dict_b = spark.createDataFrame(
+        [("x:1", "Quorra Vex", "PER"), ("x:2", "Initech Labs", "ORG"),
+         ("x:3", "Umbrella Co", "ORG"), ("x:4", "Tokyo", "LOC"),
+         ("x:5", "Oslo", "LOC"), ("x:6", "Lima", "LOC"),
+         ("per:1", "Anna Smythe", "PER"), ("per:2", "Bob Jonas", "PER"),
+         ("org:1", "Acme Corb", "ORG"), ("org:2", "Globex Ink", "ORG"),
+         ("loc:1", "Pariss", "LOC"), ("loc:2", "Berlinn", "LOC")],
+        ["entity_id", "surface", "concept"])
+    raw = extract_triples(transcripts, model)
+    fresh_a, fresh_b = (
+        _sorted_rows(canonicalize_triples(raw, d, persist=False))
+        for d in (dict_a, dict_b))
+    assert fresh_a != fresh_b  # the dictionaries link differently
+    prep_a = prepare_canonical_extraction(model, dict_a)
+    prep_b = prepare_canonical_extraction(model, dict_b)
+    assert _sorted_rows(prep_a(transcripts)) == fresh_a
+    assert _sorted_rows(prep_b(transcripts)) == fresh_b
+    assert _sorted_rows(prep_a(transcripts)) == fresh_a
 
 
 def test_normalize_surface_py_matches_column(spark):

@@ -6,8 +6,11 @@ pin that, both property-style (bound soundness on random strings) and
 end-to-end (Spark fuzzy pass vs a literal Python loop).
 """
 
+import os
 import random
+import uuid
 
+import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
 
@@ -106,3 +109,39 @@ def test_fuzzy_link_df_matches_full_loop(spark):
            for r in fuzzy_link_df(vdf, edf, "jaro_winkler", 0.9).collect()}
     assert got == expected
     assert len(got) > 0  # the fixture must actually exercise linking
+
+
+def test_worker_index_one_per_python_worker(spark):
+    """Every task of one plan key on a Python worker gets the SAME index
+    object (built once per worker), and a second key gets its own."""
+    from palladian_spark import linking
+    entries = _synthetic_dict(50, seed=5)
+    key_a, key_b = uuid.uuid4().hex, uuid.uuid4().hex
+    n_parts = max(6, 2 * spark.sparkContext.defaultParallelism)
+
+    def probe(iterator):
+        a = linking._worker_index(key_a, entries, "jaro_winkler")
+        b = linking._worker_index(key_b, entries, "jaro_winkler")
+        # counts the tasks that saw THIS object: 1, 2, ... on a shared
+        # index, always 1 on an index rebuilt per task
+        a.tasks_seen = getattr(a, "tasks_seen", 0) + 1
+        for _ in iterator:
+            pass
+        yield pd.DataFrame({"pid": [os.getpid()], "a": [id(a)],
+                            "b": [id(b)], "seen": [a.tasks_seen]})
+
+    rows = (spark.range(n_parts, numPartitions=n_parts)
+            .mapInPandas(probe, "pid long, a long, b long, seen long")
+            .collect())
+    assert len(rows) == n_parts
+    by_pid = {}
+    for r in rows:
+        by_pid.setdefault(r["pid"], []).append(r)
+    # more tasks than workers: some worker ran several tasks
+    assert max(len(v) for v in by_pid.values()) >= 2
+    for pid_rows in by_pid.values():
+        assert len({r["a"] for r in pid_rows}) == 1
+        assert len({r["b"] for r in pid_rows}) == 1
+        assert pid_rows[0]["a"] != pid_rows[0]["b"]
+        assert sorted(r["seen"] for r in pid_rows) == \
+            list(range(1, len(pid_rows) + 1))
