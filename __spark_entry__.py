@@ -739,8 +739,7 @@ def _q_mine_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequent inter-mention windows per type pair."""
     from palladian_spark.relations import mine_patterns_df
     t = _tpch_transcripts(spark, sf_dir)
-    return (mine_patterns_df(t, _tpch_model(spark, sf_dir),
-                             min_count=2, max_window_chars=60)
+    return (mine_patterns_df(t, _tpch_model(spark, sf_dir))
             .select("subj_type", "obj_type", "window",
                     F.col("count").alias("n")))
 

@@ -382,7 +382,9 @@ def connected_components_star(pairs: DataFrame, src_col: str = "a_id",
     for the fixpoint test.  ``checkpoint_dir`` makes the per-round
     lineage cut executor-loss-safe, as in :func:`connected_components`.
     ``return_rounds`` additionally returns the number of rounds taken
-    (for the O(log n) convergence evidence in tests).
+    (for the O(log n) convergence evidence in tests).  A run that ends
+    at ``max_iter`` without a round confirming the fixpoint raises
+    RuntimeError.
     """
     from pyspark.storagelevel import StorageLevel
     raw = pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
@@ -427,9 +429,13 @@ def connected_components_star(pairs: DataFrame, src_col: str = "a_id",
         if new_sig == sig:
             break
         sig = new_sig
+    else:
+        raw.unpersist()
+        raise RuntimeError(
+            f"connected_components_star: no fixpoint within max_iter="
+            f"{max_iter} rounds")
     # fixpoint: e is (child, root) star edges; roots/isolated nodes map
-    # to themselves.  min-agg per child is defensive: if max_iter cut the
-    # loop short of the star fixpoint, min(parent) is still deterministic.
+    # to themselves
     parent = (e.groupBy(F.col("u").alias("node"))
               .agg(F.min("v").alias("_root")))
     labels = (nodes.join(parent, "node", "left")
@@ -453,7 +459,9 @@ def connected_components(pairs: DataFrame, src_col: str = "a_id",
     O(nodes); rounds needed = graph diameter (near-dup clusters are
     shallow).  The fixpoint test is one count per round — an acceptable
     driver action since rounds are few; ``max_iter`` bounds adversarial
-    chains.  Deterministic by construction (min is order-free).
+    chains, and a run that ends at the cap without a round confirming the
+    fixpoint raises RuntimeError instead of returning partial labels.
+    Deterministic by construction (min is order-free).
 
     ``checkpoint_dir`` switches the per-round lineage cut from
     localCheckpoint (local-mode default) to a reliable ``.checkpoint()``
@@ -487,6 +495,11 @@ def connected_components(pairs: DataFrame, src_col: str = "a_id",
         labels = new
         if changed == 0:
             break
+    else:
+        und.unpersist()
+        raise RuntimeError(
+            f"connected_components: no fixpoint within max_iter={max_iter} "
+            f"rounds")
     # the final labels are checkpoint-materialized by the last round's
     # convergence action, so the edge cache can be released eagerly
     und.unpersist()

@@ -2,24 +2,25 @@
 (textproc/dates.py) applied per turn in one Arrow pass.
 
 Reference: extraction/entity/DateAndTimeTagger.java:43-59 over
-RegExp.ALL_DATE_FORMATS + DATE_CONTEXT_YYYY.  Shuffle-free — the scan is a
-narrow mapInPandas over (conv_id, turn_idx, text); at cluster scale it
-inherits the input's partitioning and the 42 compiled patterns live once
-per Python worker (module-level compile cache in textproc/dates.py).
-
-Both public stages share ONE mapper skeleton (_date_scan): the tagger
-emits (value, fmt, m_start) per mention, the normalized variant appends
-the DateParserLogic calendar fields (textproc/date_logic.py) — any fix
-to the scan plumbing (parallelism, null text, batching) lands in both.
+RegExp.ALL_DATE_FORMATS + DATE_CONTEXT_YYYY.  Both stages are
+``turn_stage`` kernels (operators/mentions.py), which owns the scan
+plumbing (parallelism, null text, batching); the 42 compiled patterns
+live once per Python worker (module-level compile cache in
+textproc/dates.py).  The tagger emits (value, fmt, m_start) per mention,
+the normalized variant appends the DateParserLogic calendar fields
+(textproc/date_logic.py).  A cheap JVM-side prefilter would be unsound:
+the 42 formats include bare YYYYWW/YYYYDDD digit runs, so any text
+containing 4+ digits is a candidate — which in transcripts is nearly
+everything.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, List, Sequence
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
+
+from palladian_spark.operators.mentions import turn_stage
+from palladian_spark.textproc.date_logic import parse_date
+from palladian_spark.textproc.dates import find_date_formats
 
 DATES_SCHEMA = ("conv_id string, turn_idx int, value string, fmt string, "
                 "m_start int")
@@ -29,80 +30,30 @@ DATES_NORM_SCHEMA = (
     "year int, month int, day int, hour int, minute int, second int, "
     "tz string")
 
-_INT_COLS = ("year", "month", "day", "hour", "minute", "second")
 
-
-def _date_scan(transcripts: DataFrame, text_col: str, cols: Sequence[str],
-               emit: Callable, schema: str) -> DataFrame:
-    """Shared scan skeleton: spread → one Arrow pass → per-mention rows.
-
-    ``emit(text) -> iterable of tuples`` aligned with ``cols[2:]``
-    (conv_id/turn_idx are added here).  A cheap JVM-side prefilter would
-    be unsound: the 42 formats include bare YYYYWW/YYYYDDD digit runs,
-    so any text containing 4+ digits is a candidate — which in
-    transcripts is nearly everything.
-    """
-    from palladian_spark.operators.mentions import ensure_map_parallelism
-    # the scan is Python-CPU-bound (~0.7 ms/turn single-core): a small
-    # single-file input must not pin the whole stage to one task
-    transcripts = ensure_map_parallelism(transcripts)
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, List] = {c: [] for c in cols}
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"], pdf["turn_idx"], pdf[text_col]):
-                for values in emit(text or ""):
-                    out["conv_id"].append(conv_id)
-                    out["turn_idx"].append(int(turn_idx))
-                    for c, v in zip(cols[2:], values):
-                        out[c].append(v)
-            yield pd.DataFrame(
-                {c: (pd.array(out[c], dtype="Int32") if c in _INT_COLS
-                     else out[c]) for c in cols})
-
-    return (transcripts
-            .select("conv_id", "turn_idx", text_col)
-            .mapInPandas(run, schema))
-
-
-def tag_datetimes_df(transcripts: DataFrame,
-                     text_col: str = "text") -> DataFrame:
+def tag_datetimes_df(transcripts: DataFrame) -> DataFrame:
     """(conv_id, turn_idx, value, fmt, m_start) for every date occurrence."""
-    from palladian_spark.textproc.dates import find_date_formats
-    return _date_scan(
-        transcripts, text_col,
-        ["conv_id", "turn_idx", "value", "fmt", "m_start"],
-        find_date_formats, DATES_SCHEMA)
+    return turn_stage(transcripts, DATES_SCHEMA, lambda: find_date_formats)
 
 
 def tag_datetimes_normalized_df(transcripts: DataFrame,
-                                context_year: int,
-                                text_col: str = "text") -> DataFrame:
+                                context_year: int) -> DataFrame:
     """tag_datetimes_df + the DateParserLogic normalization half
     (textproc/date_logic.py): every DATETIME mention carries typed
     (year, month, day, hour, minute, second, tz) fields, nulls where the
-    format has no such part.  Same shuffle-free single Arrow pass — the
+    format has no such part.  Same single Arrow pass — the
     parse is a per-mention dict dispatch, negligible next to the
     42-regex scan.  ``context_year`` pins two-digit-year folding so
     results are deterministic (the reference uses the wall clock:
     DateParserLogic.java:573-582)."""
-    from palladian_spark.textproc.date_logic import parse_date
-    from palladian_spark.textproc.dates import find_date_formats
-
-    def emit(text: str):
+    def kernel(text: str):
         for value, fmt, idx in find_date_formats(text):
             parts = parse_date(value, fmt, context_year)
             if parts is None:
-                yield (value, fmt, idx, None, None, None, None, None,
-                       None, None)
+                yield (value, fmt, idx) + (None,) * 7
             else:
                 yield (value, fmt, idx, parts.year, parts.month,
                        parts.day, parts.hour, parts.minute, parts.second,
                        parts.timezone)
 
-    return _date_scan(
-        transcripts, text_col,
-        ["conv_id", "turn_idx", "value", "fmt", "m_start",
-         *_INT_COLS, "tz"],
-        emit, DATES_NORM_SCHEMA)
+    return turn_stage(transcripts, DATES_NORM_SCHEMA, lambda: kernel)

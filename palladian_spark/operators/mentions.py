@@ -1,10 +1,12 @@
 """Mention-detection operators over a transcripts DataFrame.
 
-The hot path is ONE Arrow-batched ``mapInPandas`` stage per turn batch
-(tagging is embarrassingly parallel per turn — the reference processes each
-text independently, core/Tagger.java:25), with the NER model broadcast.
-No shuffle is required for extraction; the only exchanges in the pipeline
-are training aggregations and the final canonicalization.
+Every per-turn operator (here, in pos_df.py, dates_df.py and relations.py)
+is a kernel handed to ``turn_stage``: ONE Arrow-batched ``mapInPandas``
+stage per turn batch (tagging is embarrassingly parallel per turn — the
+reference processes each text independently, core/Tagger.java:25), with
+the NER model broadcast.  No shuffle is required for extraction beyond
+the salted spread of ``ensure_map_parallelism``; the other exchanges in
+the pipeline are training aggregations and the final canonicalization.
 
 Relational forms of the rule-chain set operations are provided alongside
 (window de-nesting, gaps-and-islands adjacency merge, broadcast-join
@@ -14,7 +16,7 @@ stay JVM-side where the data is already exploded.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import Callable, Iterable, Iterator, List, Optional
 
 import pandas as pd
 
@@ -26,9 +28,11 @@ from pyspark.sql.types import (
 from palladian_spark.ner.model import NerModel
 from palladian_spark.ner.tag import get_annotations
 from palladian_spark.textproc.taggers import (
-    Annotation, remove_nested, tag_candidates, tag_dates, tag_smileys, tag_urls,
+    tag_candidates, tag_dates, tag_smileys, tag_urls,
 )
-from palladian_spark.textproc.tokenize import sentences as split_sentences
+from palladian_spark.textproc.tokenize import (
+    palladian_trim, sentences as split_sentences, word_tokens,
+)
 
 MENTION_SCHEMA = StructType([
     StructField("conv_id", StringType()),
@@ -132,85 +136,83 @@ def _plan_may_shuffle(df: DataFrame) -> bool:
     return bool(_SHUFFLE_NODE_RE.search(plan))
 
 
-def _batch_tagger(tagger_fn):
-    """Wrap a text→[Annotation] kernel into a mapInPandas function."""
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            out = {k: [] for k in
-                   ("conv_id", "turn_idx", "start", "end", "value", "tag", "conf")}
+def turn_stage(transcripts: DataFrame, schema: StructType | str,
+               make_kernel: Callable[[], Callable[[str], Iterable[tuple]]]
+               ) -> DataFrame:
+    """The one per-turn Arrow stage every transcripts operator runs through.
+
+    ``make_kernel()`` is called once per task, on the worker, and returns
+    ``kernel(text) -> iterable of tuples`` aligned with ``schema``'s fields
+    after (conv_id, turn_idx) — so broadcast ``.value``, memo caches and
+    compiled patterns live for the task, not per turn.  Null texts are
+    skipped; each Arrow batch of turns yields one output batch built from
+    row tuples.  The input gets ensure_map_parallelism first: the kernels
+    are Python-CPU-bound, so a small input must not pin them to one task.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        kernel = make_kernel()
+        for pdf in batches:
+            rows: List[tuple] = []
             for conv_id, turn_idx, text in zip(
                     pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                if text is None:
-                    continue
-                for ann in tagger_fn(text):
-                    scores = getattr(ann, "scores", None)
-                    out["conv_id"].append(conv_id)
-                    out["turn_idx"].append(turn_idx)
-                    out["start"].append(ann.start)
-                    out["end"].append(ann.start + len(ann.value))
-                    out["value"].append(ann.value)
-                    out["tag"].append(ann.tag)
-                    out["conf"].append(float(scores.get(ann.tag, 1.0)) if scores else 1.0)
-            yield pd.DataFrame(out)
-    return run
+                if text is not None:
+                    key = (conv_id, turn_idx)
+                    rows.extend(key + row for row in kernel(text))
+            yield pd.DataFrame(rows, columns=names)
+
+    return (ensure_map_parallelism(transcripts)
+            .select("conv_id", "turn_idx", "text")
+            .mapInPandas(run, schema))
 
 
-def extract_mentions(transcripts: DataFrame, model: NerModel,
-                     tag_urls_too: bool = True,
-                     tag_dates_too: bool = True) -> DataFrame:
-    """The full NER chain (SURVEY.md §2.5 #1-#15) as one fused Arrow stage.
+def _mention_rows(annotations) -> Iterator[tuple]:
+    """(start, end, value, tag, conf) per annotation — the one
+    annotation→row kernel of extract_mentions and extract_candidates."""
+    for ann in annotations:
+        scores = getattr(ann, "scores", None)
+        yield (ann.start, ann.start + len(ann.value), ann.value, ann.tag,
+               float(scores.get(ann.tag, 1.0)) if scores else 1.0)
+
+
+def extract_mentions(transcripts: DataFrame, model: NerModel) -> DataFrame:
+    """The full NER chain (SURVEY.md §2.5 #1-#15, url and date taggers
+    included) as one fused Arrow stage.
 
     The model is shipped once per executor via a Spark broadcast; each Arrow
     batch of turns yields a mention batch.  Output is the exploded long
     format: one row per mention.
     """
-    spark = transcripts.sparkSession
-    model_bc = spark.sparkContext.broadcast(model)
-    cache: dict = {}
+    model_bc = transcripts.sparkSession.sparkContext.broadcast(model)
 
-    def kernel(text: str):
-        return get_annotations(text, model_bc.value,
-                               tag_urls_too=tag_urls_too,
-                               tag_dates_too=tag_dates_too,
-                               classify_cache=cache)
+    def make_kernel():
+        m, cache = model_bc.value, {}
+        return lambda text: _mention_rows(
+            get_annotations(text, m, classify_cache=cache))
 
-    return (ensure_map_parallelism(transcripts)
-            .select("conv_id", "turn_idx", "text")
-            .mapInPandas(_batch_tagger(kernel), MENTION_SCHEMA))
+    return turn_stage(transcripts, MENTION_SCHEMA, make_kernel)
 
 
 def extract_candidates(transcripts: DataFrame) -> DataFrame:
     """StringTagger-only candidate scan (SURVEY.md §2.3), tag=CANDIDATE."""
-    return (ensure_map_parallelism(transcripts)
-            .select("conv_id", "turn_idx", "text")
-            .mapInPandas(_batch_tagger(tag_candidates), MENTION_SCHEMA))
+    def kernel(text: str) -> Iterator[tuple]:
+        return _mention_rows(tag_candidates(text))
+
+    return turn_stage(transcripts, MENTION_SCHEMA, lambda: kernel)
 
 
 def word_tokens_df(transcripts: DataFrame) -> DataFrame:
     """Word tokenization with character offsets (WordTokenizer.java:22-34,
     TOKEN_SPLIT_REGEX Tokenizer.java:27) as an Arrow-batched stage — the
     offset-preserving variant that JVM ``regexp_extract_all`` can't produce."""
-    from palladian_spark.textproc.tokenize import word_tokens
+    def kernel(text: str) -> Iterator[tuple]:
+        for i, tok in enumerate(word_tokens(text)):
+            yield (i, tok.start, tok.value)
 
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            out = {k: [] for k in
-                   ("conv_id", "turn_idx", "tok_idx", "tok_start", "token")}
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                if text is None:
-                    continue
-                for i, tok in enumerate(word_tokens(text)):
-                    out["conv_id"].append(conv_id)
-                    out["turn_idx"].append(turn_idx)
-                    out["tok_idx"].append(i)
-                    out["tok_start"].append(tok.start)
-                    out["token"].append(tok.value)
-            yield pd.DataFrame(out)
-
-    return (ensure_map_parallelism(transcripts)
-            .select("conv_id", "turn_idx", "text")
-            .mapInPandas(run, TOKEN_SCHEMA))
+    return turn_stage(transcripts, TOKEN_SCHEMA, lambda: kernel)
 
 
 def word_ngrams_df(tokens: DataFrame, max_n: int = 3,
@@ -253,17 +255,16 @@ def word_ngrams_df(tokens: DataFrame, max_n: int = 3,
     return out
 
 
-def dictionary_tag_df(transcripts: DataFrame, entity_dict: DataFrame,
-                      max_words: int = 4, de_nest: bool = True) -> DataFrame:
+def dictionary_tag_df(transcripts: DataFrame,
+                      entity_dict: DataFrame) -> DataFrame:
     """Gazetteer scan (DictionaryTagger, extraction/DictionaryTagger.java:
     24-69) inverted for scale: instead of the reference's per-pattern
     rescan (O(dict × text)), the text is tokenized ONCE (Arrow stage), each
-    turn emits its 1..max_words token n-grams with offsets, and the n-grams
+    turn emits its 1..4 token n-grams with offsets, and the n-grams
     broadcast-hash-join against the normalized dictionary — O(text) scan +
-    one broadcast join, the SURVEY.md §2.3 prescription.  ``entity_dict``
-    columns: (surface, concept)."""
-    from palladian_spark.textproc.tokenize import word_tokens
-
+    one broadcast join, the SURVEY.md §2.3 prescription.  Overlapping hits
+    are de-nested (remove_nested_df).  ``entity_dict`` columns:
+    (surface, concept)."""
     ngram_schema = StructType([
         StructField("conv_id", StringType()),
         StructField("turn_idx", IntegerType()),
@@ -272,30 +273,14 @@ def dictionary_tag_df(transcripts: DataFrame, entity_dict: DataFrame,
         StructField("value", StringType()),
     ])
 
-    def emit_ngrams(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            out = {k: [] for k in ("conv_id", "turn_idx", "start", "end", "value")}
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                if text is None:
-                    continue
-                toks = word_tokens(text)
-                for i in range(len(toks)):
-                    for n in range(1, max_words + 1):
-                        if i + n > len(toks):
-                            break
-                        start = toks[i].start
-                        end = toks[i + n - 1].end
-                        out["conv_id"].append(conv_id)
-                        out["turn_idx"].append(turn_idx)
-                        out["start"].append(start)
-                        out["end"].append(end)
-                        out["value"].append(text[start:end])
-            yield pd.DataFrame(out)
+    def kernel(text: str) -> Iterator[tuple]:
+        toks = word_tokens(text)
+        for i in range(len(toks)):
+            for tok in toks[i:i + 4]:
+                start, end = toks[i].start, tok.end
+                yield (start, end, text[start:end])
 
-    ngrams = (ensure_map_parallelism(transcripts)
-              .select("conv_id", "turn_idx", "text")
-              .mapInPandas(emit_ngrams, ngram_schema))
+    ngrams = turn_stage(transcripts, ngram_schema, lambda: kernel)
     dict_norm = F.broadcast(
         entity_dict.select(F.lower(F.col("surface")).alias("_key"),
                            F.col("concept").alias("_concept"))
@@ -304,10 +289,10 @@ def dictionary_tag_df(transcripts: DataFrame, entity_dict: DataFrame,
             .join(dict_norm, F.lower(ngrams.value) == F.col("_key"))
             .select("conv_id", "turn_idx", "start", "end", "value",
                     F.col("_concept").alias("tag"), F.lit(1.0).alias("conf")))
-    return remove_nested_df(hits) if de_nest else hits
+    return remove_nested_df(hits)
 
 
-def split_sentences_df(transcripts: DataFrame, mask_entities: bool = True,
+def split_sentences_df(transcripts: DataFrame,
                        only_real_sentences: bool = False) -> DataFrame:
     """Sentence segmentation per turn (PalladianSentenceDetector port):
     URLs/dates/smileys are masked so their dots don't split sentences.
@@ -315,47 +300,30 @@ def split_sentences_df(transcripts: DataFrame, mask_entities: bool = True,
     (terminal punctuation, quote-preserving trim, length > 8, > 2 words)
     — sent_idx then numbers the SURVIVING sentences."""
 
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from palladian_spark.textproc.tokenize import palladian_trim
-        for pdf in iterator:
-            out = {k: [] for k in
-                   ("conv_id", "turn_idx", "sent_idx", "sent_start", "sentence")}
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                if text is None:
+    def kernel(text: str) -> Iterator[tuple]:
+        masks = tag_urls(text) + tag_dates(text) + tag_smileys(text)
+        i = 0
+        for sent in split_sentences(text, masks):
+            value, start = sent.value, sent.start
+            if only_real_sentences:
+                # the reference keeps the TRIMMED LAST LINE
+                # (Tokenizer.java:327-336 'parts[parts.length-1]'
+                # + 'sentence.trim()'); offsets re-anchored so the
+                # value==slice invariant still holds
+                last = value.split("\n")[-1]
+                if not last.endswith((".", "?", "!", ".”", '."')):
                     continue
-                masks = None
-                if mask_entities:
-                    masks = tag_urls(text) + tag_dates(text) + tag_smileys(text)
-                i = 0
-                for sent in split_sentences(text, masks):
-                    value, start = sent.value, sent.start
-                    if only_real_sentences:
-                        # the reference keeps the TRIMMED LAST LINE
-                        # (Tokenizer.java:327-336 'parts[parts.length-1]'
-                        # + 'sentence.trim()'); offsets re-anchored so the
-                        # value==slice invariant still holds
-                        last = value.split("\n")[-1]
-                        if not last.endswith((".", "?", "!", ".”", '."')):
-                            continue
-                        clean = palladian_trim(last, keep='“”"')
-                        if len(clean) <= 8 or clean.count(" ") + 1 <= 2:
-                            continue
-                        base = start + (len(value) - len(last))
-                        lead = len(last) - len(last.lstrip())
-                        value = last.strip()
-                        start = base + lead
-                    out["conv_id"].append(conv_id)
-                    out["turn_idx"].append(turn_idx)
-                    out["sent_idx"].append(i)
-                    out["sent_start"].append(start)
-                    out["sentence"].append(value)
-                    i += 1
-            yield pd.DataFrame(out)
+                clean = palladian_trim(last, keep='“”"')
+                if len(clean) <= 8 or clean.count(" ") + 1 <= 2:
+                    continue
+                base = start + (len(value) - len(last))
+                lead = len(last) - len(last.lstrip())
+                value = last.strip()
+                start = base + lead
+            yield (i, start, value)
+            i += 1
 
-    return (transcripts
-            .select("conv_id", "turn_idx", "text")
-            .mapInPandas(run, SENTENCE_SCHEMA))
+    return turn_stage(transcripts, SENTENCE_SCHEMA, lambda: kernel)
 
 
 # ---------------------------------------------------------------------------

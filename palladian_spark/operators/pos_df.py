@@ -2,8 +2,10 @@
 
   * ``pos_tag_df``        — rule tagger as ONE Catalyst CASE chain over the
                             token table (JVM, codegen, SQL-oracle-checkable).
-  * ``classifier_pos_tag_df`` — the PalladianPosTagger path: broadcast
-                            DictionaryModel + Arrow-batched scoring.
+  * ``universal_pos_tag_df`` — the PalladianPosTagger parity path:
+                            broadcast UniversalPosTagger, a ``turn_stage``
+                            kernel (operators/mentions.py) with a per-token
+                            memo.
   * ``np_chunks_df``      — marker-based chunking as gaps-and-islands:
                             lag() flags island starts, running sum makes
                             island ids, one groupBy folds each island into
@@ -13,16 +15,18 @@
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import pandas as pd
+from typing import Iterator
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
     IntegerType, StringType, StructField, StructType,
 )
 
-from palladian_spark.textproc.pos import CLOSED_CLASS, NP_TAGS, VP_TAGS
+from palladian_spark.operators.mentions import turn_stage, word_tokens_df
+from palladian_spark.textproc.pos import (
+    CLOSED_CLASS, NP_TAGS, VP_TAGS, UniversalPosTagger,
+)
+from palladian_spark.textproc.tokenize import word_tokens
 
 
 def rule_pos_col(token):
@@ -46,7 +50,6 @@ def rule_pos_col(token):
 def pos_tag_df(transcripts: DataFrame) -> DataFrame:
     """Token table + rule tags: offsets from the real tokenizer (Arrow
     stage), tagging fully JVM-side."""
-    from palladian_spark.operators.mentions import word_tokens_df
     toks = word_tokens_df(transcripts)
     return toks.withColumn("pos", rule_pos_col(F.col("token")))
 
@@ -61,44 +64,6 @@ POS_SCHEMA = StructType([
 ])
 
 
-def classifier_pos_tag_df(transcripts: DataFrame, model) -> DataFrame:
-    """PalladianPosTagger as an Arrow stage: model broadcast once, each
-    batch tags its turns' tokens; per-word memo cache inside the task."""
-    from palladian_spark.operators.mentions import ensure_map_parallelism
-    spark = transcripts.sparkSession
-    model_bc = spark.sparkContext.broadcast(model)
-
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from palladian_spark.textproc.pos import ClassifierPosTagger
-        from palladian_spark.textproc.tokenize import word_tokens
-        tagger = ClassifierPosTagger(model_bc.value)
-        cache: dict = {}
-        for pdf in iterator:
-            out = {k: [] for k in ("conv_id", "turn_idx", "tok_idx",
-                                   "tok_start", "token", "pos")}
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                if text is None:
-                    continue
-                for i, tok in enumerate(word_tokens(text)):
-                    tag = cache.get(tok.value)
-                    if tag is None:
-                        tag = tagger.tag_word(tok.value)
-                        if len(cache) < 500_000:
-                            cache[tok.value] = tag
-                    out["conv_id"].append(conv_id)
-                    out["turn_idx"].append(turn_idx)
-                    out["tok_idx"].append(i)
-                    out["tok_start"].append(tok.start)
-                    out["token"].append(tok.value)
-                    out["pos"].append(tag)
-            yield pd.DataFrame(out)
-
-    return (ensure_map_parallelism(transcripts)
-            .select("conv_id", "turn_idx", "text")
-            .mapInPandas(run, POS_SCHEMA))
-
-
 def universal_pos_tag_df(transcripts: DataFrame, corpus=None) -> DataFrame:
     """UniversalClassifier POS tagger (PalladianPosTagger parity:
     char-1..7-gram TEXT classifier + nominal-feature Bayes, summed —
@@ -109,39 +74,23 @@ def universal_pos_tag_df(transcripts: DataFrame, corpus=None) -> DataFrame:
     batch collapses to one classification per VOCABULARY entry — the
     right cost model for natural text, where the type/token ratio
     vanishes at corpus scale."""
-    from palladian_spark.operators.mentions import ensure_map_parallelism
-    from palladian_spark.textproc.pos import UniversalPosTagger
     spark = transcripts.sparkSession
     tagger_bc = spark.sparkContext.broadcast(UniversalPosTagger(corpus))
 
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from palladian_spark.textproc.tokenize import word_tokens
-        tagger = tagger_bc.value
-        cache: dict = {}
-        for pdf in iterator:
-            out = {k: [] for k in ("conv_id", "turn_idx", "tok_idx",
-                                   "tok_start", "token", "pos")}
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                if text is None:
-                    continue
-                for i, tok in enumerate(word_tokens(text)):
-                    tag = cache.get(tok.value)
-                    if tag is None:
-                        tag = tagger.tag_word(tok.value)
-                        if len(cache) < 500_000:
-                            cache[tok.value] = tag
-                    out["conv_id"].append(conv_id)
-                    out["turn_idx"].append(turn_idx)
-                    out["tok_idx"].append(i)
-                    out["tok_start"].append(tok.start)
-                    out["token"].append(tok.value)
-                    out["pos"].append(tag)
-            yield pd.DataFrame(out)
+    def make_kernel():
+        tagger, cache = tagger_bc.value, {}
 
-    return (ensure_map_parallelism(transcripts)
-            .select("conv_id", "turn_idx", "text")
-            .mapInPandas(run, POS_SCHEMA))
+        def kernel(text: str) -> Iterator[tuple]:
+            for i, tok in enumerate(word_tokens(text)):
+                tag = cache.get(tok.value)
+                if tag is None:
+                    tag = tagger.tag_word(tok.value)
+                    if len(cache) < 500_000:
+                        cache[tok.value] = tag
+                yield (i, tok.start, tok.value, tag)
+        return kernel
+
+    return turn_stage(transcripts, POS_SCHEMA, make_kernel)
 
 
 def np_chunks_df(tagged: DataFrame, kind: str = "NP") -> DataFrame:

@@ -18,7 +18,6 @@ from __future__ import annotations
 import uuid
 from typing import Callable, Iterator, List, NamedTuple, Optional, Sequence
 
-import pandas as pd
 import regex
 
 from pyspark import Broadcast
@@ -29,6 +28,7 @@ from pyspark.sql.types import (
 
 from palladian_spark.ner.model import NerModel
 from palladian_spark.ner.tag import ClassifiedAnnotation, get_annotations
+from palladian_spark.operators.mentions import turn_stage
 from palladian_spark.textproc.taggers import tag_dates, tag_smileys, tag_urls
 from palladian_spark.textproc.tokenize import sentences as split_sentences
 
@@ -153,46 +153,41 @@ def _extract(transcripts: DataFrame, model_bc: Broadcast,
              make_linker=None, drop_unlinked: bool = False) -> DataFrame:
     """The one triple-extraction stage: text → NER chain → sentence pairing
     → triples (→ linked surfaces, when ``make_linker`` builds a worker-side
-    ``link(surface) -> canonical-or-None``) in ONE Arrow-batched stage over
-    the broadcast model ``model_bc``.  The input is salted-repartitioned to
-    full parallelism first — the stage is Python-CPU-bound, so it must
-    never inherit a coalesced 1-partition plan from a small upstream join."""
-    from palladian_spark.operators.mentions import ensure_map_parallelism
-    transcripts = ensure_map_parallelism(transcripts)
+    ``link(surface) -> canonical-or-None``) as one ``turn_stage`` kernel
+    (operators/mentions.py) over the broadcast model ``model_bc``; each
+    triple is linked as it is produced."""
     patterns = list(patterns)
-    cols = TRIPLE_SCHEMA.fieldNames()
 
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_kernel():
         m = model_bc.value
         link = make_linker() if make_linker is not None else None
         cache: dict = {}
         window_cache: dict = {}
         compiled = compile_patterns(patterns)
-        for pdf in iterator:
-            out = []
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                if text is None:
-                    continue
-                mentions, masks = _scan_turn(text, m, cache)
-                out.extend((conv_id, turn_idx) + row
-                           for row in triples_from_mentions(
-                               text, mentions, patterns, masks=masks,
-                               compiled=compiled, match_cache=window_cache))
-            if link is not None:  # one linking pass over the batch's rows
-                raw, out = out, []
-                for conv_id, turn_idx, subj, pred, obj, *spans in raw:
-                    subj_c, obj_c = link(subj), link(obj)
-                    if drop_unlinked and (subj_c is None or obj_c is None):
-                        continue
-                    out.append((conv_id, turn_idx,
-                                subj if subj_c is None else subj_c, pred,
-                                obj if obj_c is None else obj_c, *spans))
-            yield pd.DataFrame(out, columns=cols)
 
-    return (transcripts
-            .select("conv_id", "turn_idx", "text")
-            .mapInPandas(run, TRIPLE_SCHEMA))
+        def kernel(text: str):
+            mentions, masks = _scan_turn(text, m, cache)
+            rows = triples_from_mentions(
+                text, mentions, patterns, masks=masks, compiled=compiled,
+                match_cache=window_cache)
+            if link is None:
+                return rows
+            return _linked(rows, link, drop_unlinked)
+        return kernel
+
+    return turn_stage(transcripts, TRIPLE_SCHEMA, make_kernel)
+
+
+def _linked(rows: List[tuple], link: Callable, drop_unlinked: bool
+            ) -> Iterator[tuple]:
+    """Triple rows with subj/obj replaced by their canonical surfaces
+    (unlinked sides kept, or the row dropped under ``drop_unlinked``)."""
+    for subj, pred, obj, *spans in rows:
+        subj_c, obj_c = link(subj), link(obj)
+        if drop_unlinked and (subj_c is None or obj_c is None):
+            continue
+        yield (subj if subj_c is None else subj_c, pred,
+               obj if obj_c is None else obj_c, *spans)
 
 
 def _dedup_triples(triples: DataFrame) -> DataFrame:
@@ -524,40 +519,34 @@ def cooccurrence_pairs(mentions: DataFrame, sentences: DataFrame) -> DataFrame:
             .count())
 
 
-def mine_patterns_df(transcripts: DataFrame, model: NerModel,
-                     min_count: int = 2, max_window_chars: int = 60) -> DataFrame:
+def mine_patterns_df(transcripts: DataFrame, model: NerModel) -> DataFrame:
     """PatternAnalyzer-shaped mining (PatternAnalyzer.java:46-64): frequent
-    inter-mention windows per (subj_type, obj_type), descending by count —
-    seeds for the predicate dictionary."""
-    spark = transcripts.sparkSession
-    model_bc = spark.sparkContext.broadcast(model)
-
+    inter-mention windows (1..60 chars) per (subj_type, obj_type) seen at
+    least twice, descending by count — seeds for the predicate
+    dictionary."""
+    model_bc = transcripts.sparkSession.sparkContext.broadcast(model)
     schema = StructType([
+        StructField("conv_id", StringType()),
+        StructField("turn_idx", IntegerType()),
         StructField("subj_type", StringType()),
         StructField("obj_type", StringType()),
         StructField("window", StringType()),
     ])
 
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = model_bc.value
-        cache: dict = {}
-        for pdf in iterator:
-            out = {"subj_type": [], "obj_type": [], "window": []}
-            for text in pdf["text"]:
-                if text is None:
-                    continue
-                mentions, masks = _scan_turn(text, m, cache)
-                for a, b in _sentence_pairs(text, mentions, masks):
-                    window = text[a.end:b.start].strip().lower()
-                    if 0 < len(window) <= max_window_chars:
-                        out["subj_type"].append(a.tag)
-                        out["obj_type"].append(b.tag)
-                        out["window"].append(window)
-            yield pd.DataFrame(out)
+    def make_kernel():
+        m, cache = model_bc.value, {}
 
-    raw = transcripts.select("conv_id", "turn_idx", "text").mapInPandas(run, schema)
+        def kernel(text: str):
+            mentions, masks = _scan_turn(text, m, cache)
+            for a, b in _sentence_pairs(text, mentions, masks):
+                window = text[a.end:b.start].strip().lower()
+                if 0 < len(window) <= 60:
+                    yield (a.tag, b.tag, window)
+        return kernel
+
+    raw = turn_stage(transcripts, schema, make_kernel)
     return (raw.groupBy("subj_type", "obj_type", "window").count()
-            .where(F.col("count") >= min_count)
+            .where(F.col("count") >= 2)
             .orderBy(F.desc("count")))
 
 

@@ -315,3 +315,20 @@ def test_ego_subgraph_radius(spark):
            ego_subgraph(edges, seeds, k=2).collect()}
     # 2-hop adds a-b and d-e (both endpoints within 2), not e-f
     assert two == {("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")}
+
+
+@pytest.mark.parametrize("variant, low_cap", [
+    ("connected_components", 3), ("connected_components_star", 1)])
+def test_components_raise_when_cap_ends_before_fixpoint(spark, variant,
+                                                        low_cap):
+    # a 12-node chain needs more rounds than the low cap: the cap must
+    # fail loudly instead of returning unconverged labels; at the default
+    # cap the labels equal the reference (every node → 0)
+    from palladian_spark import graph
+    cc = getattr(graph, variant)
+    p = spark.createDataFrame([(i, i + 1) for i in range(11)],
+                              "a_id long, b_id long")
+    with pytest.raises(RuntimeError, match=f"max_iter={low_cap}"):
+        cc(p, max_iter=low_cap)
+    got = {r["node"]: r["component"] for r in cc(p).collect()}
+    assert got == {i: 0 for i in range(12)}

@@ -259,7 +259,7 @@ def test_pattern_induction_loop(spark):
     t = spark.createDataFrame(pd.concat([tp, null_turn], ignore_index=True))
     model = default_model()
 
-    mined = mine_patterns_df(t, model, min_count=2)
+    mined = mine_patterns_df(t, model)
     induced = induce_patterns(mined, min_count=2, max_patterns=10)
     assert induced, "no patterns induced"
     preds = {p.pred for p in induced}
@@ -287,7 +287,7 @@ def test_pattern_precision_filter_drops_planted_noise(spark):
     gold = spark.createDataFrame(gold_pdf)
     model = default_model()
 
-    mined = mine_patterns_df(t, model, min_count=2)
+    mined = mine_patterns_df(t, model)
     induced = induce_patterns(mined, min_count=2, max_patterns=10)
     assert induced
     # noisy pattern: fires on ANY inter-mention window (catch-all), so it
