@@ -389,7 +389,7 @@ def _q_kg_triangles_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.pmod(F.xxhash64("u", "v"), F.lit(5)) == 0
     return apply_triangle_delta(
         kg_triangles(canon.where(~is_new), cache=False),
-        canon.where(~is_new), canon.where(is_new)) \
+        canon.where(~is_new), canon.where(is_new), old_is_canonical=True) \
         .select("node", "degree", "triangles", "clustering")
 
 

@@ -22,3 +22,7 @@ Design principles (see SURVEY.md §4):
 """
 
 __version__ = "0.1.0"
+
+from palladian_spark import zipcache as _zipcache
+
+_zipcache.install()

@@ -1432,15 +1432,19 @@ def apply_component_delta(old_labels: DataFrame, new_pairs: DataFrame,
 def apply_triangle_delta(old_stats: DataFrame, old_edges: DataFrame,
                          new_pairs: DataFrame, src_col: str = "u",
                          dst_col: str = "v",
-                         cache: bool = True) -> DataFrame:
+                         cache: bool = True,
+                         old_is_canonical: bool = False) -> DataFrame:
     """Incremental per-node triangle counts: fold a batch of NEW edges
     into an existing :func:`kg_triangles` profile without re-enumerating
     the old graph's wedges.
 
     ``old_stats`` is kg_triangles(old snapshot); ``old_edges`` the old
     snapshot's edge set (any direction/duplication — canonicalized
-    here); ``new_pairs`` the batch.  Added triangles contain 1, 2 or 3
-    novel edges — three DISJOINT cases, each enumerated exactly once:
+    here, unless ``old_is_canonical`` says it already holds each edge
+    once as ``u < v``: then it is read as it is, neither re-deduplicated
+    nor persisted again); ``new_pairs`` the batch.  Added triangles
+    contain 1, 2 or 3 novel edges — three DISJOINT cases, each
+    enumerated exactly once:
 
       1 novel edge (u,v)  — common old-neighbors w of u and v;
       2 novel edges       — wedges centered on the shared node of two
@@ -1469,9 +1473,13 @@ def apply_triangle_delta(old_stats: DataFrame, old_edges: DataFrame,
                           F.greatest(F.col(a), F.col(b)).alias("v"))
                 .where(F.col("u") != F.col("v")).distinct())
 
-    e_old = _canon(old_edges, src_col, dst_col)
-    if cache:
-        e_old = e_old.persist(StorageLevel.MEMORY_AND_DISK)
+    if old_is_canonical:
+        e_old = old_edges.select(F.col(src_col).alias("u"),
+                                 F.col(dst_col).alias("v"))
+    else:
+        e_old = _canon(old_edges, src_col, dst_col)
+        if cache:
+            e_old = e_old.persist(StorageLevel.MEMORY_AND_DISK)
     cand = _canon(new_pairs, src_col, dst_col)
     touched = (cand.select(F.col("u").alias("node"))
                .unionAll(cand.select(F.col("v").alias("node")))

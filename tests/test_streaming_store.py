@@ -76,3 +76,66 @@ def test_compact_batches(spark, tmp_path):
     assert sorted(os.listdir(base)) == ["batch=2"]
     assert _rows(read_batches(spark, base, [2])) == [(0, 2), (1, 2), (2, 2)]
     assert compact_batches(spark, base) == 0
+
+
+def test_compact_batches_survives_a_crash_at_every_step(spark, tmp_path,
+                                                         monkeypatch):
+    """A crash at any rename or rmtree of a compaction, and then at any
+    step of the recovery, loses no row: the next listing reads the rows
+    of before the compaction, and a retry compacts them."""
+    seed = str(tmp_path / "seed")
+    for i in range(3):
+        write_batch(spark.createDataFrame([(i,)], "k long"), seed, i)
+    want = [(0,), (1,), (2,)]
+    fault = {"at": 0, "steps": 0}
+
+    def crashing(real):
+        def step(path, *args):
+            if str(path).startswith(str(tmp_path / "case")):
+                fault["steps"] += 1
+                if fault["steps"] == fault["at"]:
+                    raise OSError("injected crash")
+            return real(path, *args)
+        return step
+
+    monkeypatch.setattr(os, "rename", crashing(os.rename))
+    monkeypatch.setattr(shutil, "rmtree", crashing(shutil.rmtree))
+
+    def run(fn, base, at):
+        fault.update(at=at, steps=0)
+        try:
+            fn(base)
+        except OSError:
+            return True
+        finally:
+            fault["at"] = 0
+        return False
+
+    def rows(base):
+        df = read_batches(spark, base, committed_batches(base))
+        return sorted(tuple(r)[:1] for r in df.collect())
+
+    clean = str(tmp_path / "case_clean")
+    shutil.copytree(seed, clean)
+    assert not run(lambda b: compact_batches(spark, b), clean, 0)
+    n_steps = fault["steps"]
+    assert n_steps == 5   # 3 renames aside, 1 rename in, 1 rmtree
+
+    for k in range(1, n_steps + 1):
+        crashed = str(tmp_path / f"case_{k}")
+        shutil.copytree(seed, crashed)
+        assert run(lambda b: compact_batches(spark, b), crashed, k)
+        # the recovery itself crashes at each of its steps in turn
+        j = 1
+        while True:
+            again = f"{crashed}_r{j}"
+            shutil.copytree(crashed, again)
+            if not run(committed_batches, again, j):
+                break
+            assert rows(again) == want
+            j += 1
+        assert rows(crashed) == want
+        compact_batches(spark, crashed)
+        assert committed_batches(crashed) == [2]
+        assert sorted(os.listdir(crashed)) == ["batch=2"]
+        assert rows(crashed) == want

@@ -83,7 +83,7 @@ def main():
               and sh == oh)
         status = "OK " if ok else "FAIL"
         print(f"{name:28s} {status} spark_rows={len(srows):8d} "
-              f"oracle_rows={len(orows):8d} hash={'=' if sh == oh else sh + '!=' + oh}"
+              f"oracle_rows={len(orows):8d} hash={'=' + sh if sh == oh else sh + '!=' + oh}"
               f" spark={t_spark:.1f}s duck={t_duck:.1f}s")
         if not ok:
             failures += 1
