@@ -375,22 +375,21 @@ def _q_kg_triangles_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes.  The oracle recomputes the full-graph profile directly,
     pinning the O(|Δ|·deg) path to the recompute (the snapshot-cadence
     twin of kg_degrees_incremental / dedup_components_incremental)."""
-    from pyspark.storagelevel import StorageLevel
-    from palladian_spark.graph import apply_triangle_delta, kg_triangles
-    canon = (_comention_edges(spark, sf_dir)
-             .select(F.least("u", "v").alias("u"),
-                     F.greatest("u", "v").alias("v"))
-             .where(F.col("u") != F.col("v")).distinct()
-             .persist(StorageLevel.MEMORY_AND_DISK))
+    from palladian_spark.graph import (_persist, _release, _simple_edges,
+                                       apply_triangle_delta, kg_triangles)
+    held: list = []
+    canon = _persist(_simple_edges(_comention_edges(spark, sf_dir), "u", "v"),
+                     held)
     # materialize the cache NOW: the delta path scans this edge set from
     # several branches of one action, and an unpopulated persist would
-    # re-run the NER extraction once per branch
+    # re-run the NER extraction once per branch; released once the
+    # result is pinned
     canon.count()
     is_new = F.pmod(F.xxhash64("u", "v"), F.lit(5)) == 0
-    return apply_triangle_delta(
+    return _release(apply_triangle_delta(
         kg_triangles(canon.where(~is_new), cache=False),
-        canon.where(~is_new), canon.where(is_new), old_is_canonical=True) \
-        .select("node", "degree", "triangles", "clustering")
+        canon.where(~is_new), canon.where(is_new), old_is_canonical=True)
+        .select("node", "degree", "triangles", "clustering"), held)
 
 
 def _q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,31 +1,44 @@
 """Graph materialization & analytics over the constructed KG.
 
 The pipeline's output is a (subj, pred, obj) triple table; what a KG
-consumer runs NEXT is graph-shaped: node/edge tables, degree profiles,
-importance ranking, and duplicate-cluster resolution.  The reference
-stops at triples (its PatternAnalyzer/KG demos print them), so these are
-the add-on operators a large-scale pipeline needs — all expressed as
-DataFrame plans that survive a 1000-executor scale-up:
+consumer runs NEXT is graph-shaped.  This module holds those analytics,
+all expressed as DataFrame plans (nothing graph-sized reaches the
+driver):
 
-  * kg_edges / kg_degrees — distinct-edge materialization + one hash-agg
-    degree profile (map-side combinable).
-  * pagerank — classic iterative rank over the entity graph: each
-    iteration is contributions-join → exact decimal-summed agg → rank
-    update (one shuffle per iteration, broadcast-sized N on the driver).
-    Per-edge contributions are cast to decimal(38,18) before the sum so
-    every iteration is ORDER-INDEPENDENT — bit-identical results for any
-    partitioning, which is what lets a SQL oracle replay it exactly.
-    Dangling-node mass is dropped (the classic simplification; noted so
-    ranks are comparable, not probability-normalized).
-  * connected_components — min-label propagation to fixpoint (converges
-    in O(diameter) rounds, each one join + one min-agg — the
-    no-giant-component-in-memory shape), for resolving near-dup PAIRS
-    (LSH/MinHash output) into duplicate clusters.
+  * tables and profiles — kg_edges, kg_edge_provenance, kg_degrees,
+    kg_summary, conv_graph_stats, kg_role_provenance,
+    neighborhood_features, match_motif;
+  * ranking — pagerank (weighted, personalized, warm-started) and hits;
+  * communities and clusters — label_propagation, modularity,
+    quotient_graph, connected_components(_star), infer_node_types;
+  * cohesion — kg_triangles, ktruss, kcore, link_prediction_scores;
+  * reachability — bfs_levels, ego_subgraph, transitive_closure;
+  * walk corpora — random_walks, biased_random_walks;
+  * maintenance — kg_snapshot_diff and the incremental apply_*_delta.
+
+Iterative analytics run a fixed number of rounds (or a fixpoint they
+raise on) and sum decimal-exact, so a SQL oracle replays them exactly.
+
+Each graph-shaped concept has one private helper that every analytic
+calls: ``_simple_edges`` (distinct undirected edges u < v, self-loops
+dropped), ``_neighbours`` (those edges in both directions), ``_degree``,
+``_triangles`` (the degree-ordered enumerator behind kg_triangles,
+ktruss and apply_triangle_delta), ``_close_wedges`` (the delta's other
+two cases), ``_walk_graph``/``_walk_step`` (both walk corpora) and
+``_lineage_cut`` (per-round lineage truncation).
+
+Release rule: an analytic persists its intermediates through
+``_persist`` and returns through ``_release``, which pins the result
+with an eager localCheckpoint and then unpersists them, so a collected
+result leaves nothing in the session's cache.  The two fixpoint loops
+(connected_components, transitive_closure) end on a lineage cut their
+convergence action already materialized and unpersist directly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 def _lineage_cut(df: DataFrame, checkpoint_dir: str | None,
@@ -46,6 +59,130 @@ def _lineage_cut(df: DataFrame, checkpoint_dir: str | None,
         sc.setCheckpointDir(checkpoint_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def _persist(df: DataFrame, held: list | None) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK) and record it in ``held`` for
+    :func:`_release`; with ``held`` None, return ``df`` as it is."""
+    if held is None:
+        return df
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    held.append(df)
+    return df
+
+
+def _release(result: DataFrame, held: list | None) -> DataFrame:
+    """Pin ``result`` with an eager localCheckpoint, then unpersist every
+    frame in ``held``: the pinned result no longer reads them.  With
+    nothing held, return ``result`` unchanged (no extra job)."""
+    if not held:
+        return result
+    result = result.localCheckpoint(eager=True)
+    for df in held:
+        df.unpersist()
+    return result
+
+
+def _simple_edges(edges: DataFrame, src_col: str,
+                  dst_col: str) -> DataFrame:
+    """The undirected simple graph of ``edges``: distinct (u, v) with
+    u < v — reversed duplicates collapsed, self-loops dropped."""
+    return (edges
+            .select(F.least(F.col(src_col), F.col(dst_col)).alias("u"),
+                    F.greatest(F.col(src_col), F.col(dst_col)).alias("v"))
+            .where(F.col("u") != F.col("v"))
+            .distinct())
+
+
+def _neighbours(e: DataFrame) -> DataFrame:
+    """Symmetric neighbour list (u, v) of the simple edges ``e``.  A
+    reverse has u > v, so it cannot collide with an ``e`` row and no
+    second distinct is needed."""
+    return e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
+def _degree(adj: DataFrame) -> DataFrame:
+    """(node, degree): the number of rows per ``u`` of an adjacency."""
+    return (adj.groupBy(F.col("u").alias("node"))
+            .agg(F.count(F.lit(1)).alias("degree")))
+
+
+def _triangles(e: DataFrame, deg: DataFrame,
+               held: list | None = None) -> DataFrame:
+    """Every triangle of the simple edges ``e`` exactly once, as (a, b, c).
+
+    Degree-ordered wedge enumeration (Suri & Vassilvitskii, "Counting
+    Triangles and the Curse of the Last Reducer", WWW'11): each edge is
+    oriented from its lower-(degree, id) endpoint to its higher one, by
+    ``deg`` (node, degree), so oriented out-degree is O(√m) and the wedge
+    self-join never melts on a celebrity node.  A triangle is emitted at
+    its lowest-ranked corner ``a``, with rank(b) < rank(c), and closed by
+    the oriented edge b → c.  The oriented set is read three times; it is
+    persisted when ``held`` is given."""
+    ed = (e.join(deg.select(F.col("node").alias("u"),
+                            F.col("degree").alias("du")), "u")
+          .join(deg.select(F.col("node").alias("v"),
+                           F.col("degree").alias("dv")), "v"))
+    u_first = (F.struct(F.col("du"), F.col("u"))
+               < F.struct(F.col("dv"), F.col("v")))
+    eo = _persist(ed.select(
+        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
+        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
+        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("ddeg")),
+        held)
+    e1, e2 = eo.alias("e1"), eo.alias("e2")
+    wedges = (e1.join(e2, (F.col("e1.src") == F.col("e2.src"))
+                      & (F.struct(F.col("e1.ddeg"), F.col("e1.dst"))
+                         < F.struct(F.col("e2.ddeg"), F.col("e2.dst"))))
+              .select(F.col("e1.src").alias("a"),
+                      F.col("e1.dst").alias("b"),
+                      F.col("e2.dst").alias("c")))
+    closing = eo.select(F.col("src").alias("b"), F.col("dst").alias("c"))
+    return wedges.join(closing, ["b", "c"]).select("a", "b", "c")
+
+
+def _close_wedges(pairs: DataFrame, adj: DataFrame) -> DataFrame:
+    """(lo, hi, w) for every pair (u, v) of ``pairs`` and every w adjacent
+    to both u and v in the adjacency ``adj`` (u, v).  Each pair expands
+    from its endpoint lower in (``adj`` degree, id), so a pair at a
+    celebrity costs min(du, dv) wedge rows, not the hub's degree; the
+    other endpoint is a bounded membership probe on (hi, w)."""
+    deg = _degree(adj)
+    p = (pairs
+         .join(deg.select(F.col("node").alias("u"),
+                          F.col("degree").alias("du")), "u", "left")
+         .join(deg.select(F.col("node").alias("v"),
+                          F.col("degree").alias("dv")), "v", "left"))
+    u_lo = (F.struct(F.coalesce("du", F.lit(0)).alias("d"),
+                     F.col("u").alias("n"))
+            < F.struct(F.coalesce("dv", F.lit(0)).alias("d"),
+                       F.col("v").alias("n")))
+    lo = F.when(u_lo, F.col("u")).otherwise(F.col("v"))
+    hi = F.when(u_lo, F.col("v")).otherwise(F.col("u"))
+    return (p.select(lo.alias("lo"), hi.alias("hi"))
+            .join(adj.select(F.col("u").alias("lo"), F.col("v").alias("w")),
+                  "lo")
+            .join(adj.select(F.col("u").alias("hi"), F.col("v").alias("w")),
+                  ["hi", "w"])
+            .select("lo", "hi", "w"))
+
+
+def _corners(tri: DataFrame) -> DataFrame:
+    """(node, _t): how many of the triangles ``tri`` (three node columns)
+    each node is a corner of."""
+    return (tri.select(F.explode(F.array(*tri.columns)).alias("node"))
+            .groupBy("node").agg(F.count(F.lit(1)).alias("_t")))
+
+
+def _with_clustering(stats: DataFrame) -> DataFrame:
+    """(node, degree, triangles) plus the local clustering coefficient
+    2·T / (deg·(deg−1)), 0.0 below degree 2, rounded to 6 decimals."""
+    d = F.col("degree")
+    return stats.select(
+        "node", "degree", "triangles",
+        F.round(F.when(d >= 2, F.lit(2.0) * F.col("triangles")
+                       / (d * (d - F.lit(1.0))))
+                .otherwise(F.lit(0.0)), 6).alias("clustering"))
 
 
 def kg_edges(triples: DataFrame) -> DataFrame:
@@ -106,65 +243,25 @@ def kg_triangles(edges: DataFrame, src_col: str = "u",
     2·T(v) / (deg(v)·(deg(v)−1)) (0.0 when deg < 2), rounded to 6
     decimals.  Nodes with no triangles still appear (count 0).
 
-    Shape: degree-ordered wedge enumeration (Suri & Vassilvitskii,
-    "Counting Triangles and the Curse of the Last Reducer", WWW'11) —
-    every edge is oriented from its lower-(degree, id) endpoint to its
-    higher one, so oriented out-degree is O(√m) and the wedge self-join
-    never melts on a celebrity node; each triangle is emitted exactly
-    once (at its lowest-ranked corner) and exploded to its three corners
-    for one map-side-combinable count agg.  All joins are plain hash
-    joins on node keys; nothing driver-side.
+    Shape: one :func:`_triangles` enumeration, each triangle exploded to
+    its three corners for one map-side-combinable count agg.  All joins
+    are plain hash joins on node keys; nothing driver-side.
 
     ``cache`` persists the distinct edge set and the oriented edge set
     (each consumed by 2–3 downstream branches): without it, a lazy DAG
     re-executes the full upstream plan — e.g. a whole NER pipeline —
-    once per branch.  MEMORY_AND_DISK, edge-table sized; disable only
-    when the input is already materialized.
+    once per branch.  MEMORY_AND_DISK, edge-table sized, released once
+    the result is pinned; disable only when the input is already
+    materialized.
     """
-    from pyspark.storagelevel import StorageLevel
-    e = (edges
-         .select(F.least(F.col(src_col), F.col(dst_col)).alias("u"),
-                 F.greatest(F.col(src_col), F.col(dst_col)).alias("v"))
-         .where(F.col("u") != F.col("v"))
-         .distinct())
-    if cache:
-        e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    deg = (e.select(F.col("u").alias("node"))
-           .unionAll(e.select(F.col("v").alias("node")))
-           .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
-    ed = (e.join(deg.select(F.col("node").alias("u"),
-                            F.col("degree").alias("du")), "u")
-          .join(deg.select(F.col("node").alias("v"),
-                           F.col("degree").alias("dv")), "v"))
-    # total order rank(x) = (deg(x), x); orient src → dst upward
-    u_first = (F.struct(F.col("du"), F.col("u"))
-               < F.struct(F.col("dv"), F.col("v")))
-    eo = ed.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("ddeg"))
-    if cache:
-        eo = eo.persist(StorageLevel.MEMORY_AND_DISK)
-    e1, e2 = eo.alias("e1"), eo.alias("e2")
-    wedges = (e1.join(e2, (F.col("e1.src") == F.col("e2.src"))
-                      & (F.struct(F.col("e1.ddeg"), F.col("e1.dst"))
-                         < F.struct(F.col("e2.ddeg"), F.col("e2.dst"))))
-              .select(F.col("e1.src").alias("a"),
-                      F.col("e1.dst").alias("b"),
-                      F.col("e2.dst").alias("c")))
-    closing = eo.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    tri = wedges.join(closing, ["b", "c"])
-    tcount = (tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
-              .groupBy("node").agg(F.count(F.lit(1)).alias("_t")))
-    return (deg.join(tcount, "node", "left")
-            .select("node", "degree",
-                    F.coalesce("_t", F.lit(0)).cast("bigint")
-                    .alias("triangles"),
-                    F.round(F.when(
-                        F.col("degree") >= 2,
-                        F.lit(2.0) * F.coalesce("_t", F.lit(0))
-                        / (F.col("degree") * (F.col("degree") - F.lit(1.0))))
-                        .otherwise(F.lit(0.0)), 6).alias("clustering")))
+    held = [] if cache else None
+    e = _persist(_simple_edges(edges, src_col, dst_col), held)
+    deg = _degree(_neighbours(e))
+    stats = (deg.join(_corners(_triangles(e, deg, held)), "node", "left")
+             .select("node", "degree",
+                     F.coalesce("_t", F.lit(0)).cast("bigint")
+                     .alias("triangles")))
+    return _release(_with_clustering(stats), held)
 
 
 def link_prediction_scores(edges: DataFrame, src_col: str = "u",
@@ -187,15 +284,9 @@ def link_prediction_scores(edges: DataFrame, src_col: str = "u",
     contract (an oracle must apply the same filter).  Pairs are ranked
     by the caller; ``min_common`` prunes the long tail early.
     """
-    e = (edges
-         .select(F.least(F.col(src_col), F.col(dst_col)).alias("u"),
-                 F.greatest(F.col(src_col), F.col(dst_col)).alias("v"))
-         .where(F.col("u") != F.col("v"))
-         .distinct())
-    und = e.unionAll(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = und.groupBy(F.col("u").alias("node")) \
-        .agg(F.count(F.lit(1)).alias("degree"))
+    e = _simple_edges(edges, src_col, dst_col)
+    und = _neighbours(e)
+    deg = _degree(und)
     centers = und.join(deg, und.u == deg.node) \
         .select(F.col("u").alias("n"), F.col("degree").alias("nd"),
                 F.col("v").alias("nb"))
@@ -237,7 +328,6 @@ def _exact_contrib_sum(col: str):
 def pagerank(edges: DataFrame, n_iter: int = 3, damping: float = 0.85,
              src_col: str = "src", dst_col: str = "dst",
              round_decimals: int | None = 6,
-             checkpoint: bool = False,
              checkpoint_dir: str | None = None,
              weight_col: str | None = None,
              seeds: DataFrame | None = None,
@@ -246,12 +336,10 @@ def pagerank(edges: DataFrame, n_iter: int = 3, damping: float = 0.85,
 
     rank_0 = 1/N; rank_{k+1}(v) = (1−d)/N + d · Σ_{u→v} rank_k(u)/out(u).
     One shuffle per iteration (the contribution agg); the rank table is
-    O(nodes) rows.  ``checkpoint`` truncates lineage each iteration —
-    required for large ``n_iter`` on real clusters, off by default so
-    small runs stay plan-pure.  Pass ``checkpoint_dir`` (implies
-    ``checkpoint``) to make the cut RELIABLE (``.checkpoint()`` to a
-    shared path) — executor-loss-safe, the cluster-scale setting; the
-    default ``localCheckpoint`` is local-mode only (see _lineage_cut).
+    O(nodes) rows.  ``checkpoint_dir`` truncates lineage each iteration
+    with a RELIABLE ``.checkpoint()`` to that shared path (see
+    _lineage_cut) — required for large ``n_iter`` on real clusters;
+    without it the plan stays one lazy DAG, which suits small runs.
     Dangling mass is not redistributed (documented simplification).
 
     ``weight_col`` switches to WEIGHTED PageRank: parallel edges are
@@ -333,7 +421,7 @@ def pagerank(edges: DataFrame, n_iter: int = 3, damping: float = 0.85,
                  .select("node",
                          (restart + F.lit(damping)
                           * F.coalesce("_in", F.lit(0.0))).alias("rank")))
-        if checkpoint or checkpoint_dir is not None:
+        if checkpoint_dir is not None:
             ranks = _lineage_cut(ranks, checkpoint_dir, eager=False)
     if round_decimals is not None:
         ranks = ranks.withColumn("rank", F.round("rank", round_decimals))
@@ -386,12 +474,12 @@ def connected_components_star(pairs: DataFrame, src_col: str = "a_id",
     at ``max_iter`` without a round confirming the fixpoint raises
     RuntimeError.
     """
-    from pyspark.storagelevel import StorageLevel
-    raw = pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
     # round 1 and the final node labeling both read the raw pair plan —
     # persist so an expensive upstream (MinHash/LSH) executes once, not
     # once per consumer
-    raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
+    held: list = []
+    raw = _persist(pairs.select(F.col(src_col).alias("u"),
+                                F.col(dst_col).alias("v")), held)
     nodes = (raw.select(F.col("u").alias("node"))
              .union(raw.select(F.col("v").alias("node"))).distinct())
     e = raw.where(F.col("u") != F.col("v")).distinct()
@@ -438,11 +526,10 @@ def connected_components_star(pairs: DataFrame, src_col: str = "a_id",
     # to themselves
     parent = (e.groupBy(F.col("u").alias("node"))
               .agg(F.min("v").alias("_root")))
-    labels = (nodes.join(parent, "node", "left")
-              .select("node", F.coalesce("_root", "node").alias("component")))
-    # pin the (node-sized) result so the raw-pair cache can be released
-    labels = labels.localCheckpoint(eager=True)
-    raw.unpersist()
+    labels = _release(
+        nodes.join(parent, "node", "left")
+        .select("node", F.coalesce("_root", "node").alias("component")),
+        held)
     if return_rounds:
         return labels, rounds
     return labels
@@ -467,7 +554,6 @@ def connected_components(pairs: DataFrame, src_col: str = "a_id",
     localCheckpoint (local-mode default) to a reliable ``.checkpoint()``
     so a multi-round run survives executor loss (see _lineage_cut).
     """
-    from pyspark.storagelevel import StorageLevel
     e = pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
     und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))) \
         .distinct()
@@ -595,9 +681,7 @@ def kg_summary(triples: DataFrame) -> DataFrame:
 
 def hits(edges: DataFrame, n_iter: int = 2,
          src_col: str = "src", dst_col: str = "dst",
-         checkpoint: bool = False,
-         checkpoint_dir: str | None = None,
-         cache: bool = True) -> DataFrame:
+         checkpoint_dir: str | None = None) -> DataFrame:
     """HITS hubs & authorities over the DISTINCT directed edge set,
     UNNORMALIZED for ``n_iter`` iterations: h⁰ = 1; aᵏ(v) = Σ_{u→v}
     hᵏ⁻¹(u); hᵏ(u) = Σ_{u→v} aᵏ(v).  Without per-iteration
@@ -609,21 +693,19 @@ def hits(edges: DataFrame, n_iter: int = 2,
 
     Output: (node, hub, auth, hub_norm, auth_norm).  Same shuffle shape
     as :func:`pagerank` (two join+agg rounds per iteration, node-sized
-    state); ``checkpoint``/``checkpoint_dir`` cut lineage identically.
+    state); ``checkpoint_dir`` cuts lineage identically.
 
-    ``cache`` persists the distinct edge and node sets — every
-    iteration joins ``e`` twice, so without it a lazy upstream plan
-    (e.g. the whole NER pipeline) re-executes 4·n_iter times.
+    The distinct edge and node sets are persisted — every iteration
+    joins ``e`` twice, so without it a lazy upstream plan (e.g. the
+    whole NER pipeline) re-executes 4·n_iter times — and released once
+    the result is pinned.
     """
-    from pyspark.storagelevel import StorageLevel
-    e = edges.select(F.col(src_col).alias("src"),
-                     F.col(dst_col).alias("dst")).distinct()
-    if cache:
-        e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node"))).distinct())
-    if cache:
-        nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
+    held: list = []
+    e = _persist(edges.select(F.col(src_col).alias("src"),
+                              F.col(dst_col).alias("dst")).distinct(), held)
+    nodes = _persist(e.select(F.col("src").alias("node"))
+                     .union(e.select(F.col("dst").alias("node")))
+                     .distinct(), held)
     hubs = nodes.withColumn("hub", F.lit(1).cast("long"))
     auths = None
     for _ in range(n_iter):
@@ -639,23 +721,22 @@ def hits(edges: DataFrame, n_iter: int = 2,
         hubs = (nodes.join(h, "node", "left")
                 .select("node", F.coalesce("_h", F.lit(0))
                         .cast("long").alias("hub")))
-        if checkpoint or checkpoint_dir is not None:
+        if checkpoint_dir is not None:
             hubs = _lineage_cut(hubs, checkpoint_dir, eager=False)
             auths = _lineage_cut(auths, checkpoint_dir, eager=False)
     scored = hubs.join(auths, "node")
     totals = scored.agg(F.sum("hub").alias("_th"),
                         F.sum("auth").alias("_ta"))
-    return (scored.crossJoin(F.broadcast(totals))
-            .select("node", "hub", "auth",
-                    (F.col("hub") / F.col("_th")).alias("hub_norm"),
-                    (F.col("auth") / F.col("_ta")).alias("auth_norm")))
+    return _release(
+        scored.crossJoin(F.broadcast(totals))
+        .select("node", "hub", "auth",
+                (F.col("hub") / F.col("_th")).alias("hub_norm"),
+                (F.col("auth") / F.col("_ta")).alias("auth_norm")), held)
 
 
 def label_propagation(edges: DataFrame, n_iter: int = 2,
                       src_col: str = "src", dst_col: str = "dst",
-                      checkpoint: bool = False,
-                      checkpoint_dir: str | None = None,
-                      cache: bool = True) -> DataFrame:
+                      checkpoint_dir: str | None = None) -> DataFrame:
     """Community detection by synchronous label propagation over the
     UNDIRECTED simple graph of ``edges`` (self-loops dropped): labels
     start as the node id; each iteration EVERY node adopts the most
@@ -669,15 +750,10 @@ def label_propagation(edges: DataFrame, n_iter: int = 2,
     rounds are one community.  Per iteration: one join of the (cached)
     symmetric neighbor list with the node-sized label table + one
     count agg + one row_number per node — shuffles on node keys only,
-    hub skew goes to AQE."""
-    from pyspark.storagelevel import StorageLevel
-    e = (edges.select(F.col(src_col).alias("u"),
-                      F.col(dst_col).alias("v"))
-         .where(F.col("u") != F.col("v")).distinct())
-    nbr = e.unionAll(e.select(F.col("v").alias("u"),
-                              F.col("u").alias("v"))).distinct()
-    if cache:
-        nbr = nbr.persist(StorageLevel.MEMORY_AND_DISK)
+    hub skew goes to AQE.  ``checkpoint_dir`` cuts lineage per round, as
+    in :func:`pagerank`."""
+    held: list = []
+    nbr = _persist(_neighbours(_simple_edges(edges, src_col, dst_col)), held)
     labels = (nbr.select(F.col("u").alias("node")).distinct()
               .withColumn("label", F.col("node")))
     w = Window.partitionBy("node").orderBy(F.col("_n").desc(),
@@ -689,14 +765,13 @@ def label_propagation(edges: DataFrame, n_iter: int = 2,
         labels = (votes.withColumn("_rn", F.row_number().over(w))
                   .where(F.col("_rn") == 1)
                   .select("node", "label"))
-        if checkpoint or checkpoint_dir is not None:
+        if checkpoint_dir is not None:
             labels = _lineage_cut(labels, checkpoint_dir, eager=False)
-    return labels
+    return _release(labels, held)
 
 
 def bfs_levels(edges: DataFrame, seeds: DataFrame, max_depth: int = 2,
-               src_col: str = "src", dst_col: str = "dst",
-               cache: bool = True) -> DataFrame:
+               src_col: str = "src", dst_col: str = "dst") -> DataFrame:
     """Breadth-first distance labels from ``seeds`` over the UNDIRECTED
     simple graph of ``edges``: (node, dist) for every node within
     ``max_depth`` hops (dist 0 = the seeds themselves).  Classic
@@ -704,31 +779,24 @@ def bfs_levels(edges: DataFrame, seeds: DataFrame, max_depth: int = 2,
     symmetric neighbor list with the frontier + one anti-join against
     the visited set; rounds = ``max_depth`` (a constant), so no
     fixpoint driver loop.  Hub-skewed frontiers go to AQE."""
-    from pyspark.storagelevel import StorageLevel
-    e = (edges.select(F.col(src_col).alias("u"),
-                      F.col(dst_col).alias("v"))
-         .where(F.col("u") != F.col("v")).distinct())
-    nbr = e.unionAll(e.select(F.col("v").alias("u"),
-                              F.col("u").alias("v"))).distinct()
-    if cache:
-        nbr = nbr.persist(StorageLevel.MEMORY_AND_DISK)
+    held: list = []
+    nbr = _persist(_neighbours(_simple_edges(edges, src_col, dst_col)), held)
     frontier = seeds.select("node").distinct()
     visited = frontier.withColumn("dist", F.lit(0))
     for k in range(1, max_depth + 1):
         nxt = (nbr.join(frontier.withColumnRenamed("node", "u"), "u")
                .select(F.col("v").alias("node")).distinct()
                .join(visited.select("node"), "node", "left_anti"))
-        visited = visited.unionByName(
-            nxt.withColumn("dist", F.lit(k)))
         # cut lineage growth: the visited set is node-sized
-        visited = visited.localCheckpoint(eager=False) if cache else visited
+        visited = (visited.unionByName(nxt.withColumn("dist", F.lit(k)))
+                   .localCheckpoint(eager=False))
         frontier = nxt
-    return visited.select("node", F.col("dist").cast("int").alias("dist"))
+    return _release(
+        visited.select("node", F.col("dist").cast("int").alias("dist")), held)
 
 
 def kcore(edges: DataFrame, k: int = 2, rounds: int = 4,
-          src_col: str = "src", dst_col: str = "dst",
-          cache: bool = True) -> DataFrame:
+          src_col: str = "src", dst_col: str = "dst") -> DataFrame:
     """k-core peeling over the UNDIRECTED simple graph of ``edges``:
     repeatedly drop nodes whose surviving degree is < ``k``.  Returns
     (node, degree) for the nodes alive after exactly ``rounds`` peels,
@@ -749,28 +817,17 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 4,
     16M edges those per-round edge snapshots spilled and peeling went
     8× superlinear — see BENCH.md's graph-scale table.)  No collects;
     survives a 1000-executor scale-up."""
-    from pyspark.storagelevel import StorageLevel
-    e = (edges.select(F.col(src_col).alias("u"),
-                      F.col(dst_col).alias("v"))
-         .where(F.col("u") != F.col("v")).distinct())
-    und = e.unionAll(e.select(F.col("v").alias("u"),
-                              F.col("u").alias("v"))).distinct()
-    if cache:
-        und = und.persist(StorageLevel.MEMORY_AND_DISK)
-    keep = None
-    for i in range(rounds):
-        alive = und if keep is None else (
-            und.join(keep, "u")
-               .join(keep.withColumnRenamed("u", "v"), "v")
-               .select("u", "v"))
-        deg = alive.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.where(F.col("d") >= k).select("u")
+    held: list = []
+    und = _persist(_neighbours(_simple_edges(edges, src_col, dst_col)), held)
+    alive = und
+    for _ in range(rounds):
         # node-bounded lineage cut — rounds compose joins otherwise
-        keep = keep.localCheckpoint(eager=False)
-    alive = (und.join(keep, "u")
-             .join(keep.withColumnRenamed("u", "v"), "v"))
-    return (alive.groupBy(F.col("u").alias("node"))
-            .agg(F.count(F.lit(1)).cast("long").alias("degree")))
+        keep = (_degree(alive).where(F.col("degree") >= k)
+                .select(F.col("node").alias("u"))
+                .localCheckpoint(eager=False))
+        alive = (und.join(keep, "u")
+                 .join(keep.withColumnRenamed("u", "v"), "v"))
+    return _release(_degree(alive), held)
 
 
 # portable LCG-style mixer shared by random_walks and its SQL oracle.
@@ -780,6 +837,66 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 4,
 # SQL oracles — which use the unreduced form — replay the same values.
 _WALK_MIX = ("pmod(pmod({cur}, 2147483647) * 1103515245"
              " + {step} * 12345 + {seed}, 2147483647)")
+
+
+def _walk_graph(edges: DataFrame, src_col: str, dst_col: str,
+                id_strategy: str, held: list) -> tuple:
+    """(vocab, adj, deg) of the directed simple graph of ``edges``:
+    vocab (node, id), adj (s_id, d_id, rank) — each node's out-neighbours
+    ranked by d_id — and deg (s_id, deg), its out-degree.  adj and deg
+    are persisted into ``held``."""
+    e = (edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
+         .where(F.col("s") != F.col("d")).distinct())
+    nodes = (e.select(F.col("s").alias("node"))
+             .unionAll(e.select(F.col("d").alias("node"))).distinct())
+    if id_strategy == "hash":
+        vocab = nodes.withColumn("id", F.xxhash64("node"))
+    else:
+        vocab = nodes.withColumn(
+            "id", (F.row_number().over(Window.orderBy("node")) - 1)
+            .cast("long"))
+    adj = _persist(
+        e.join(vocab.withColumnRenamed("node", "s")
+               .withColumnRenamed("id", "s_id"), "s")
+        .join(vocab.withColumnRenamed("node", "d")
+              .withColumnRenamed("id", "d_id"), "d")
+        .withColumn("rank", (F.row_number().over(
+            Window.partitionBy("s_id").orderBy("d_id")) - 1).cast("long"))
+        .select("s_id", "d_id", "rank"), held)
+    deg = _persist(adj.groupBy("s_id").agg(F.count(F.lit(1)).alias("deg")),
+                   held)
+    return vocab, adj, deg
+
+
+def _walk_step(frontier: DataFrame, adj: DataFrame, deg: DataFrame,
+               step: int, seed: int) -> DataFrame:
+    """One uniform step: each walk (walk_id, cur) moves to cur's
+    out-neighbour of rank LCG_mix(cur, step, seed) mod out-degree; walks
+    at a sink stop.  Returns (walk_id, prev, cur)."""
+    mix = _WALK_MIX.format(cur="cur", step=step, seed=seed)
+    chosen = (frontier
+              .join(F.broadcast(deg), frontier.cur == F.col("s_id"))
+              .withColumn("pick", F.expr(mix) % F.col("deg"))
+              .select("walk_id", F.col("s_id").alias("_from"), "pick"))
+    return (chosen
+            .join(adj, (F.col("_from") == adj.s_id)
+                  & (F.col("pick") == adj.rank))
+            .select("walk_id", F.col("s_id").alias("prev"),
+                    F.col("d_id").alias("cur")))
+
+
+def _walk_rows(frontier: DataFrame, step: int) -> DataFrame:
+    return frontier.select("walk_id", F.lit(step).alias("step"),
+                           F.col("cur").alias("node_id"))
+
+
+def _walk_corpus(out: DataFrame, vocab: DataFrame) -> DataFrame:
+    """Decode the (walk_id, step, node_id) rows to (walk_id, step, node)."""
+    return (out
+            .join(F.broadcast(vocab.withColumnRenamed("id", "node_id")),
+                  "node_id")
+            .select("walk_id", F.col("step").cast("int").alias("step"),
+                    "node"))
 
 
 def random_walks(edges: DataFrame, walk_len: int = 3, seed: int = 7,
@@ -806,55 +923,15 @@ def random_walks(edges: DataFrame, walk_len: int = 3, seed: int = 7,
     distributed (no global sort — the 100-TB path), still deterministic
     per node, but not oracle-replayable (DuckDB lacks xxhash64) and
     walk_ids are sparse hashes rather than dense indices."""
-    e = (edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-         .where(F.col("s") != F.col("d")).distinct())
-    nodes = (e.select(F.col("s").alias("node"))
-             .unionAll(e.select(F.col("d").alias("node"))).distinct())
-    if id_strategy == "hash":
-        vocab = nodes.withColumn("id", F.xxhash64("node"))
-    else:
-        vocab = nodes.withColumn(
-            "id", (F.row_number().over(Window.orderBy("node")) - 1)
-            .cast("long"))
-    adj = (e
-           .join(vocab.withColumnRenamed("node", "s")
-                 .withColumnRenamed("id", "s_id"), "s")
-           .join(vocab.withColumnRenamed("node", "d")
-                 .withColumnRenamed("id", "d_id"), "d")
-           .withColumn("rank", (F.row_number().over(
-               Window.partitionBy("s_id").orderBy("d_id")) - 1)
-               .cast("long"))
-           .select("s_id", "d_id", "rank"))
-    deg = adj.groupBy("s_id").agg(F.count(F.lit(1)).alias("deg"))
-    adj = adj.persist()
-    deg = deg.persist()
-
-    starts = deg.select(F.col("s_id").alias("walk_id"),
-                        F.col("s_id").alias("cur"))
-    out = starts.select("walk_id", F.lit(0).alias("step"),
-                        F.col("cur").alias("node_id"))
-    frontier = starts
+    held: list = []
+    vocab, adj, deg = _walk_graph(edges, src_col, dst_col, id_strategy, held)
+    frontier = deg.select(F.col("s_id").alias("walk_id"),
+                          F.col("s_id").alias("cur"))
+    out = _walk_rows(frontier, 0)
     for step in range(1, walk_len + 1):
-        mix = _WALK_MIX.format(cur="cur", step=step, seed=seed)
-        chosen = (frontier
-                  .join(F.broadcast(deg),
-                        frontier.cur == F.col("s_id"))
-                  .withColumn("pick", F.expr(mix) % F.col("deg"))
-                  .select("walk_id", F.col("s_id").alias("_from"),
-                          "pick"))
-        nxt = (chosen
-               .join(adj, (F.col("_from") == adj.s_id)
-                     & (F.col("pick") == adj.rank))
-               .select("walk_id", F.col("d_id").alias("cur")))
-        out = out.unionByName(
-            nxt.select("walk_id", F.lit(step).alias("step"),
-                       F.col("cur").alias("node_id")))
-        frontier = nxt
-    return (out
-            .join(F.broadcast(vocab.withColumnRenamed("id", "node_id")),
-                  "node_id")
-            .select("walk_id", F.col("step").cast("int").alias("step"),
-                    "node"))
+        frontier = _walk_step(frontier, adj, deg, step, seed)
+        out = out.unionByName(_walk_rows(frontier, step))
+    return _release(_walk_corpus(out, vocab), held)
 
 
 def conv_graph_stats(triples: DataFrame) -> DataFrame:
@@ -909,25 +986,8 @@ def biased_random_walks(edges: DataFrame, walk_len: int = 3, seed: int = 7,
     walk by design; node2vec's bias needs the full neighbor row set.
     Output: (walk_id, step, node), walk_id = start node's vocabulary id.
     """
-    e = (edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-         .where(F.col("s") != F.col("d")).distinct())
-    nodes = (e.select(F.col("s").alias("node"))
-             .unionAll(e.select(F.col("d").alias("node"))).distinct())
-    vocab = nodes.withColumn(
-        "id", (F.row_number().over(Window.orderBy("node")) - 1)
-        .cast("long"))
-    adj = (e
-           .join(vocab.withColumnRenamed("node", "s")
-                 .withColumnRenamed("id", "s_id"), "s")
-           .join(vocab.withColumnRenamed("node", "d")
-                 .withColumnRenamed("id", "d_id"), "d")
-           .withColumn("rank", (F.row_number().over(
-               Window.partitionBy("s_id").orderBy("d_id")) - 1)
-               .cast("long"))
-           .select("s_id", "d_id", "rank"))
-    deg = adj.groupBy("s_id").agg(F.count(F.lit(1)).alias("deg"))
-    adj = adj.persist()
-    deg = deg.persist()
+    held: list = []
+    vocab, adj, deg = _walk_graph(edges, src_col, dst_col, "sorted", held)
     edge_keys = adj.select(F.col("s_id").alias("_es"),
                            F.col("d_id").alias("_ed")).distinct()
 
@@ -937,23 +997,9 @@ def biased_random_walks(edges: DataFrame, walk_len: int = 3, seed: int = 7,
 
     starts = deg.select(F.col("s_id").alias("walk_id"),
                         F.col("s_id").alias("cur"))
-    out = starts.select("walk_id", F.lit(0).alias("step"),
-                        F.col("cur").alias("node_id"))
-
     # step 1: uniform first-order choice (no previous node yet)
-    mix1 = _WALK_MIX.format(cur="cur", step=1, seed=seed)
-    chosen1 = (starts
-               .join(F.broadcast(deg), starts.cur == F.col("s_id"))
-               .withColumn("pick", F.expr(mix1) % F.col("deg"))
-               .select("walk_id", F.col("s_id").alias("_from"), "pick"))
-    frontier = (chosen1
-                .join(adj, (F.col("_from") == adj.s_id)
-                      & (F.col("pick") == adj.rank))
-                .select("walk_id", F.col("s_id").alias("prev"),
-                        F.col("d_id").alias("cur")))
-    out = out.unionByName(
-        frontier.select("walk_id", F.lit(1).alias("step"),
-                        F.col("cur").alias("node_id")))
+    frontier = _walk_step(starts, adj, deg, 1, seed)
+    out = _walk_rows(starts, 0).unionByName(_walk_rows(frontier, 1))
 
     for step in range(2, walk_len + 1):
         cand = (frontier
@@ -983,15 +1029,9 @@ def biased_random_walks(edges: DataFrame, walk_len: int = 3, seed: int = 7,
                       & (F.col("cum") - F.col("w") <= F.col("pick")))
                .select("walk_id", F.col("cur").alias("prev"),
                        F.col("d_id").alias("cur")))
-        out = out.unionByName(
-            nxt.select("walk_id", F.lit(step).alias("step"),
-                       F.col("cur").alias("node_id")))
+        out = out.unionByName(_walk_rows(nxt, step))
         frontier = nxt
-    return (out
-            .join(F.broadcast(vocab.withColumnRenamed("id", "node_id")),
-                  "node_id")
-            .select("walk_id", F.col("step").cast("int").alias("step"),
-                    "node"))
+    return _release(_walk_corpus(out, vocab), held)
 
 
 def kg_role_provenance(triples: DataFrame,
@@ -1075,55 +1115,24 @@ def ktruss(edges: DataFrame, k: int = 3, rounds: int = 2,
     node-level peeling.
 
     Fixed round count (SQL-replayable, like kcore); per round the edge
-    support is computed by DEGREE-ORDERED triangle enumeration (the
-    kg_triangles orientation): every surviving edge is oriented from its
-    lower-(degree, id) endpoint, wedges self-join on the source with an
-    ordered pair guard, the closing edge is verified against the
-    canonical edge set, and each triangle found — exactly once — is
-    exploded to its three canonical edges for one count agg.  Oriented
-    out-degree is O(√m), so a celebrity hub cannot melt the wedge join
-    (the first version joined the RAW symmetric adjacency on both
-    endpoints; a 2%-mass hub at 16M edges put ~10^11 wedge rows through
-    one task and never finished — see BENCH.md).  On small DENSE
+    support is computed by :func:`_triangles` (the kg_triangles
+    enumeration) over the surviving edges, and each triangle found —
+    exactly once — is exploded to its three canonical edges for one count
+    agg.  Oriented out-degree is O(√m), so a celebrity hub cannot melt
+    the wedge join (the first version joined the RAW symmetric adjacency
+    on both endpoints; a 2%-mass hub at 16M edges put ~10^11 wedge rows
+    through one task and never finished — see BENCH.md).  On small DENSE
     hub-free graphs the orientation machinery costs a few× over the
     naive join (sf0.01 contract graph: ~20 s → ~2 min) — the deliberate
     price for an op that cannot melt at cluster scale.  The surviving
     edge set only shrinks; each round ends in a lazy lineage cut so
     rounds don't compose joins."""
-    from pyspark.storagelevel import StorageLevel
-    e = (edges
-         .select(F.least(F.col(src_col), F.col(dst_col)).alias("u"),
-                 F.greatest(F.col(src_col), F.col(dst_col)).alias("v"))
-         .where(F.col("u") != F.col("v"))
-         .distinct())
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
+    held: list = []
+    e = _persist(_simple_edges(edges, src_col, dst_col), held)
     need = k - 2
     sup = None
     for _ in range(rounds):
-        und = e.unionAll(e.select(F.col("v").alias("u"),
-                                  F.col("u").alias("v")))
-        deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-        ed = (e.join(deg.select(F.col("u"), F.col("d").alias("du")), "u")
-              .join(deg.select(F.col("u").alias("v"),
-                               F.col("d").alias("dv")), "v"))
-        u_first = (F.struct(F.col("du"), F.col("u"))
-                   < F.struct(F.col("dv"), F.col("v")))
-        eo = ed.select(
-            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-            F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("ddeg"))
-        e1, e2 = eo.alias("e1"), eo.alias("e2")
-        wedges = (e1.join(e2, (F.col("e1.src") == F.col("e2.src"))
-                          & (F.struct(F.col("e1.ddeg"), F.col("e1.dst"))
-                             < F.struct(F.col("e2.ddeg"), F.col("e2.dst"))))
-                  .select(F.col("e1.src").alias("a"),
-                          F.col("e1.dst").alias("b"),
-                          F.col("e2.dst").alias("c")))
-        tri = wedges.join(
-            e.select(F.col("u").alias("_cu"), F.col("v").alias("_cv")),
-            (F.least(F.col("b"), F.col("c")) == F.col("_cu"))
-            & (F.greatest(F.col("b"), F.col("c")) == F.col("_cv"))) \
-            .select("a", "b", "c")
+        tri = _triangles(e, _degree(_neighbours(e)))
         corners = (tri.select(F.least("a", "b").alias("u"),
                               F.greatest("a", "b").alias("v"))
                    .unionAll(tri.select(F.least("a", "c").alias("u"),
@@ -1136,9 +1145,9 @@ def ktruss(edges: DataFrame, k: int = 3, rounds: int = 2,
         e = kept.localCheckpoint(eager=False)
         sup = sup.localCheckpoint(eager=False)
     if sup is None:  # rounds == 0
-        return e.withColumn("support", F.lit(0).cast("long"))
-    return (e.join(sup, ["u", "v"])
-            .select("u", "v", "support"))
+        return _release(e.withColumn("support", F.lit(0).cast("long")), held)
+    return _release(e.join(sup, ["u", "v"]).select("u", "v", "support"),
+                    held)
 
 
 def transitive_closure(edges: DataFrame, src_col: str = "src",
@@ -1161,7 +1170,6 @@ def transitive_closure(edges: DataFrame, src_col: str = "src",
     the whole KG.  ``checkpoint_dir`` makes long runs executor-loss-safe
     (see _lineage_cut).
     """
-    from pyspark.storagelevel import StorageLevel
     e = (edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
          .where(F.col("src") != F.col("dst")).distinct()
          .withColumn("dist", F.lit(1).cast("int")))
@@ -1194,13 +1202,19 @@ def transitive_closure(edges: DataFrame, src_col: str = "src",
     return paths.select("src", "dst", "dist")
 
 
-def _canonical_undirected(edges: DataFrame, src_col: str,
-                          dst_col: str) -> DataFrame:
-    """Distinct undirected simple edges as (cu, cv) with cu < cv."""
-    return (edges.select(
-        F.least(F.col(src_col), F.col(dst_col)).alias("cu"),
-        F.greatest(F.col(src_col), F.col(dst_col)).alias("cv"))
-        .where(F.col("cu") != F.col("cv")).distinct())
+def _labelled_edges(edges: DataFrame, labels: DataFrame, src_col: str,
+                    dst_col: str, node_col: str, label_col: str) -> tuple:
+    """(ce, lab, el): the simple edges ``ce`` (u, v), the labels as
+    (node, label), and ``el`` — each labelled edge with its endpoints'
+    labels (lu, lv)."""
+    ce = _simple_edges(edges, src_col, dst_col)
+    lab = labels.select(F.col(node_col).alias("node"),
+                        F.col(label_col).alias("label"))
+    el = (ce.join(lab.select(F.col("node").alias("u"),
+                             F.col("label").alias("lu")), "u")
+          .join(lab.select(F.col("node").alias("v"),
+                           F.col("label").alias("lv")), "v"))
+    return ce, lab, el
 
 
 def modularity(edges: DataFrame, labels: DataFrame,
@@ -1215,25 +1229,17 @@ def modularity(edges: DataFrame, labels: DataFrame,
 
     All heavy steps are hash aggs on node/edge keys; m is a one-row agg
     broadcast into the final projection (no driver round-trip)."""
-    ce = _canonical_undirected(edges, src_col, dst_col)
-    lab = labels.select(F.col(node_col).alias("node"),
-                        F.col(label_col).alias("label"))
+    ce, lab, el = _labelled_edges(edges, labels, src_col, dst_col,
+                                  node_col, label_col)
     m_df = ce.agg(F.count(F.lit(1)).alias("m"))
-
-    la = lab.select(F.col("node").alias("cu"), F.col("label").alias("lu"))
-    lb = lab.select(F.col("node").alias("cv"), F.col("label").alias("lv"))
-    el = ce.join(la, "cu").join(lb, "cv")
     intra = (el.where(F.col("lu") == F.col("lv"))
              .groupBy(F.col("lu").alias("community"))
              .agg(F.count(F.lit(1)).cast("long").alias("internal_edges")))
 
-    deg = (ce.select(F.col("cu").alias("node"))
-           .unionAll(ce.select(F.col("cv").alias("node")))
-           .groupBy("node").agg(F.count(F.lit(1)).alias("d")))
-    cd = (lab.join(deg, "node")
+    cd = (lab.join(_degree(_neighbours(ce)), "node")
           .groupBy(F.col("label").alias("community"))
           .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"),
-               F.sum("d").cast("long").alias("degree_sum")))
+               F.sum("degree").cast("long").alias("degree_sum")))
 
     out = (cd.join(intra, "community", "left")
            .withColumn("internal_edges",
@@ -1256,13 +1262,9 @@ def quotient_graph(edges: DataFrame, labels: DataFrame,
     (c_u == c_v) carry the internal-edge weight, so the quotient + the
     node labels reconstruct the community-level structure exactly.
     Returns (c_u, c_v, weight) with c_u ≤ c_v."""
-    ce = _canonical_undirected(edges, src_col, dst_col)
-    lab = labels.select(F.col(node_col).alias("node"),
-                        F.col(label_col).alias("label"))
-    la = lab.select(F.col("node").alias("cu"), F.col("label").alias("lu"))
-    lb = lab.select(F.col("node").alias("cv"), F.col("label").alias("lv"))
-    return (ce.join(la, "cu").join(lb, "cv")
-            .select(F.least("lu", "lv").alias("c_u"),
+    _, _, el = _labelled_edges(edges, labels, src_col, dst_col,
+                               node_col, label_col)
+    return (el.select(F.least("lu", "lv").alias("c_u"),
                     F.greatest("lu", "lv").alias("c_v"))
             .groupBy("c_u", "c_v")
             .agg(F.count(F.lit(1)).cast("long").alias("weight")))
@@ -1334,18 +1336,15 @@ def infer_node_types(edges: DataFrame, seed_types: DataFrame,
     typed frontier + one argmax agg — label propagation's cost profile
     with an anti-join instead of relabeling; O(n_rounds) shuffles total.
     """
-    und = (edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-           .unionAll(edges.select(F.col(dst_col).alias("a"),
-                                  F.col(src_col).alias("b")))
-           .where(F.col("a") != F.col("b")).distinct())
+    nbr = _neighbours(_simple_edges(edges, src_col, dst_col))
     typed = seed_types.select("node", "type",
                               F.lit(0).alias("round"))
     for k in range(1, int(n_rounds) + 1):
-        votes = (und.join(typed.select(F.col("node").alias("a"), "type"),
-                          "a")
-                 .join(typed.select(F.col("node").alias("b")), "b",
+        votes = (nbr.join(typed.select(F.col("node").alias("u"), "type"),
+                          "u")
+                 .join(typed.select(F.col("node").alias("v")), "v",
                        "left_anti")
-                 .groupBy(F.col("b").alias("node"), "type")
+                 .groupBy(F.col("v").alias("node"), "type")
                  .agg(F.count(F.lit(1)).alias("n")))
         w = Window.partitionBy("node").orderBy(F.col("n").desc(),
                                                F.col("type").asc())
@@ -1450,10 +1449,12 @@ def apply_triangle_delta(old_stats: DataFrame, old_edges: DataFrame,
       2 novel edges       — wedges centered on the shared node of two
                             novel edges, closed by an old edge (the
                             center is unique per triangle);
-      3 novel edges       — node-ordered wedge join within the batch
-                            (batch-sized by construction; if a single
-                            batch can carry a celebrity node, orient by
-                            batch degree first as kg_triangles does).
+      3 novel edges       — :func:`_triangles` within the batch,
+                            ordered by batch degree.
+
+    Cases 1 and 2 are one :func:`_close_wedges` each, called as
+    (novel edges, old adjacency) and (old closing edges, novel
+    adjacency).
 
     Per-batch cost: TWO broadcast-semi-join scans of the old edge set
     (never shuffled, never self-joined — with a node-bucketed store
@@ -1465,22 +1466,16 @@ def apply_triangle_delta(old_stats: DataFrame, old_edges: DataFrame,
     Output schema and values equal kg_triangles(old ∪ new) exactly
     (clustering recomputed from the merged degrees) — pinned by the
     recompute-equality pytest and the kg_triangles_incremental oracle.
+    ``cache`` persists the batch-sized slices (and the canonicalized old
+    edges), released once the result is pinned.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    def _canon(df, a, b):
-        return (df.select(F.least(F.col(a), F.col(b)).alias("u"),
-                          F.greatest(F.col(a), F.col(b)).alias("v"))
-                .where(F.col("u") != F.col("v")).distinct())
-
+    held = [] if cache else None
     if old_is_canonical:
         e_old = old_edges.select(F.col(src_col).alias("u"),
                                  F.col(dst_col).alias("v"))
     else:
-        e_old = _canon(old_edges, src_col, dst_col)
-        if cache:
-            e_old = e_old.persist(StorageLevel.MEMORY_AND_DISK)
-    cand = _canon(new_pairs, src_col, dst_col)
+        e_old = _persist(_simple_edges(old_edges, src_col, dst_col), held)
+    cand = _simple_edges(new_pairs, src_col, dst_col)
     touched = (cand.select(F.col("u").alias("node"))
                .unionAll(cand.select(F.col("v").alias("node")))
                .distinct())
@@ -1495,129 +1490,42 @@ def apply_triangle_delta(old_stats: DataFrame, old_edges: DataFrame,
     # edge a batch candidate could collide with (its endpoints are
     # touched by definition) — so the novelty anti-join runs against
     # this batch-sized slice, not the full old set
-    e_both = e_u.join(F.broadcast(touched.select(F.col("node").alias("v"))),
-                      "v", "left_semi")
-    if cache:
-        e_both = e_both.persist(StorageLevel.MEMORY_AND_DISK)
-    delta = cand.join(e_both, ["u", "v"], "left_anti")
-    if cache:
-        delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
+    e_both = _persist(
+        e_u.join(F.broadcast(touched.select(F.col("node").alias("v"))),
+                 "v", "left_semi"), held)
+    delta = _persist(cand.join(e_both, ["u", "v"], "left_anti"), held)
+    # every old edge at a touched node, from its touched side(s) —
+    # both-touched edges appear in both directions
+    adj_t = _persist(e_u.unionAll(e_v.select(F.col("v").alias("u"),
+                                             F.col("u").alias("v"))), held)
+    adj_new = _neighbours(delta)
 
-    # (x, y): x is a touched endpoint, (x, y) an old edge — both-touched
-    # edges appear in both directions, singly-touched ones only from
-    # their touched side
-    adj_t = (e_u.select(F.col("u").alias("x"), F.col("v").alias("y"))
-             .unionAll(e_v.select(F.col("v").alias("x"),
-                                  F.col("u").alias("y"))))
-    if cache:
-        adj_t = adj_t.persist(StorageLevel.MEMORY_AND_DISK)
-    adj_new = (delta.select(F.col("u").alias("x"), F.col("v").alias("y"))
-               .unionAll(delta.select(F.col("v").alias("x"),
-                                      F.col("u").alias("y"))))
-
-    # case 1: novel (u,v) closed by two old edges through w.  w == v is
-    # impossible — (u,w) old and w == v would put (u,v) in the old set,
-    # contradicting the anti-join above.  Expand the wedge from the
-    # LOWER-old-degree endpoint (degrees read off adj_t itself — it
-    # holds every old edge at a touched node), so a batch edge incident
-    # to a celebrity costs min(du, dv) wedge rows, not the hub's degree;
-    # the other side is a bounded membership probe on (hi, w).
-    deg_t = adj_t.groupBy("x").agg(F.count(F.lit(1)).alias("d"))
-    dl = (delta
-          .join(deg_t.select(F.col("x").alias("u"),
-                             F.col("d").alias("du")), "u", "left")
-          .join(deg_t.select(F.col("x").alias("v"),
-                             F.col("d").alias("dv")), "v", "left"))
-    u_lo = (F.struct(F.coalesce("du", F.lit(0)).alias("d"),
-                     F.col("u").alias("n"))
-            < F.struct(F.coalesce("dv", F.lit(0)).alias("d"),
-                       F.col("v").alias("n")))
-    dlh = dl.select(
-        F.when(u_lo, F.col("u")).otherwise(F.col("v")).alias("lo"),
-        F.when(u_lo, F.col("v")).otherwise(F.col("u")).alias("hi"))
-    tri1 = (dlh
-            .join(adj_t.select(F.col("x").alias("lo"),
-                               F.col("y").alias("w")), "lo")
-            .join(adj_t.select(F.col("x").alias("hi"),
-                               F.col("y").alias("w")), ["hi", "w"])
-            .select(F.col("lo").alias("u"), F.col("hi").alias("v"), "w"))
+    # case 1: novel (u,v) closed by two old edges through w, expanded
+    # from the lower-old-degree endpoint.  w == v is impossible — (u,w)
+    # old and w == v would put (u,v) in the old set, contradicting the
+    # anti-join above.
     # case 2: two novel edges (c,p), (c,q) sharing center c, closed by
-    # old (p,q).  Enumerated from the OLD closing edge, expanding from
-    # its lower-BATCH-degree endpoint — a center with thousands of novel
-    # edges (a celebrity in the batch) would cost dΔ(c)² as a wedge
-    # self-join but only Σ min(dΔ(p), dΔ(q)) this way.
-    deg_n = adj_new.groupBy("x").agg(F.count(F.lit(1)).alias("dn"))
-    eb = (e_both
-          .join(deg_n.select(F.col("x").alias("u"),
-                             F.col("dn").alias("du_n")), "u", "left")
-          .join(deg_n.select(F.col("x").alias("v"),
-                             F.col("dn").alias("dv_n")), "v", "left"))
-    u_lo2 = (F.struct(F.coalesce("du_n", F.lit(0)).alias("d"),
-                      F.col("u").alias("n"))
-             < F.struct(F.coalesce("dv_n", F.lit(0)).alias("d"),
-                        F.col("v").alias("n")))
-    eb2 = eb.select(
-        F.when(u_lo2, F.col("u")).otherwise(F.col("v")).alias("lo"),
-        F.when(u_lo2, F.col("v")).otherwise(F.col("u")).alias("hi"))
-    # c == hi is impossible: (lo, c) novel with c == hi would put the
-    # old edge (lo, hi) in the batch, contradicting the anti-join
-    tri2 = (eb2
-            .join(adj_new.select(F.col("x").alias("lo"),
-                                 F.col("y").alias("c")), "lo")
-            .join(adj_new.select(F.col("x").alias("hi"),
-                                 F.col("y").alias("c")), ["hi", "c"])
-            .select("c", F.col("lo").alias("p"), F.col("hi").alias("q")))
-    # case 3: triangles entirely inside the batch — the same
-    # degree-ordered orientation kg_triangles uses, so a batch celebrity
-    # keeps O(√|Δ|) oriented out-degree
-    d3 = (delta
-          .join(deg_n.select(F.col("x").alias("u"),
-                             F.col("dn").alias("du_n")), "u")
-          .join(deg_n.select(F.col("x").alias("v"),
-                             F.col("dn").alias("dv_n")), "v"))
-    u_lo3 = (F.struct(F.col("du_n").alias("d"), F.col("u").alias("n"))
-             < F.struct(F.col("dv_n").alias("d"), F.col("v").alias("n")))
-    eo3 = d3.select(
-        F.when(u_lo3, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(u_lo3, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        F.when(u_lo3, F.col("dv_n")).otherwise(F.col("du_n")).alias("dd"))
-    o1, o2 = eo3.alias("o1"), eo3.alias("o2")
-    tri3 = (o1.join(o2, (F.col("o1.src") == F.col("o2.src"))
-                    & (F.struct(F.col("o1.dd").alias("d"),
-                                F.col("o1.dst").alias("n"))
-                       < F.struct(F.col("o2.dd").alias("d"),
-                                  F.col("o2.dst").alias("n"))))
-            .select(F.col("o1.src").alias("a"),
-                    F.col("o1.dst").alias("b"),
-                    F.col("o2.dst").alias("c"))
-            .join(eo3.select(F.col("src").alias("b"),
-                             F.col("dst").alias("c")), ["b", "c"])
-            .select("a", "b", "c"))
-
-    corners = (tri1.select(F.explode(F.array("u", "v", "w")).alias("node"))
-               .unionAll(tri2.select(
-                   F.explode(F.array("c", "p", "q")).alias("node")))
-               .unionAll(tri3.select(
-                   F.explode(F.array("a", "b", "c")).alias("node"))))
-    tri_add = corners.groupBy("node").agg(
-        F.count(F.lit(1)).alias("_t_add"))
+    # old (p,q) — enumerated from the OLD closing edge and expanded from
+    # its lower-BATCH-degree endpoint, so a batch celebrity center costs
+    # Σ min(dΔ(p), dΔ(q)), not dΔ(c)².  c == q is impossible for the same
+    # anti-join reason.
+    # case 3: triangles entirely inside the batch, degree-ordered by
+    # batch degree, so a batch celebrity keeps O(√|Δ|) out-degree.
+    tri = (_close_wedges(delta, adj_t)
+           .unionAll(_close_wedges(e_both, adj_new))
+           .unionAll(_triangles(delta, _degree(adj_new))))
+    # degrees added by the batch, counted off the exploded endpoints: the
+    # _degree(adj_new) form plans one more Spark job inside this query
     deg_add = (delta.select(F.explode(F.array("u", "v")).alias("node"))
                .groupBy("node").agg(F.count(F.lit(1)).alias("_d_add")))
-
     merged = (old_stats.select("node", "degree", "triangles")
               .join(deg_add, "node", "full_outer")
-              .join(tri_add, "node", "left")
+              .join(_corners(tri), "node", "left")
               .select(
                   "node",
                   (F.coalesce("degree", F.lit(0))
                    + F.coalesce("_d_add", F.lit(0))).alias("degree"),
                   (F.coalesce("triangles", F.lit(0))
-                   + F.coalesce("_t_add", F.lit(0))).cast("bigint")
+                   + F.coalesce("_t", F.lit(0))).cast("bigint")
                   .alias("triangles")))
-    return merged.select(
-        "node", "degree", "triangles",
-        F.round(F.when(
-            F.col("degree") >= 2,
-            F.lit(2.0) * F.col("triangles")
-            / (F.col("degree") * (F.col("degree") - F.lit(1.0))))
-            .otherwise(F.lit(0.0)), 6).alias("clustering"))
+    return _release(_with_clustering(merged), held)

@@ -1,6 +1,11 @@
 """kg_triangles: hand-computed goldens on small graphs + invariance to
-edge duplication/reversal, and the degree-orientation count identity."""
+edge duplication/reversal, the degree-orientation count identity, and
+the shared triangle enumerator (kg_triangles, ktruss) against a
+pure-Python neighbour-set intersection."""
 
+from collections import defaultdict
+
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from palladian_spark.graph import kg_triangles
@@ -88,3 +93,38 @@ def test_star_center_zero_clustering(spark):
     # hub h with leaves — no triangle, coefficient 0
     got = _run(spark, [("h", f"l{i}") for i in range(10)])
     assert got["h"] == (10, 0, 0.0)
+
+
+_NODE = st.integers(0, 11)
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(st.lists(st.tuples(_NODE, _NODE), max_size=24),
+       st.sets(_NODE, min_size=1, max_size=12))
+def test_triangle_enumeration_matches_set_intersection(spark, pairs, spokes):
+    """kg_triangles counts and one ktruss round's per-edge support equal
+    a pure-Python neighbour-set intersection.  The graph has a hub (node
+    0 joined to every spoke), reversed duplicates and self-loops."""
+    from palladian_spark.graph import ktruss
+    edges = pairs + [(0, s) for s in spokes]
+    edges += [(v, u) for u, v in edges[::2]] + [(u, u) for u, _ in pairs[:2]]
+    nbr = defaultdict(set)
+    for u, v in edges:
+        if u != v:
+            nbr[u].add(v)
+            nbr[v].add(u)
+    canon = {(min(u, v), max(u, v)) for u, v in edges if u != v}
+    want_tri = {x: (len(n), sum(1 for a, b in canon if a in n and b in n))
+                for x, n in nbr.items()}
+    support = {(u, v): len(nbr[u] & nbr[v]) for u, v in canon}
+    want_truss = {e: s for e, s in support.items() if s >= 1}
+
+    df = spark.createDataFrame(edges, "u long, v long")
+    got_tri = {r["node"]: (r["degree"], r["triangles"])
+               for r in kg_triangles(df).collect()}
+    got_truss = {(r["u"], r["v"]): r["support"]
+                 for r in ktruss(df, k=3, rounds=1, src_col="u",
+                                 dst_col="v").collect()}
+    assert got_tri == want_tri
+    assert got_truss == want_truss
