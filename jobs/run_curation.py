@@ -18,8 +18,7 @@ the per-language ``report/`` funnel.  With ``--base`` it ALSO dedupes
 the curated survivors against a prior corpus snapshot
 (operators/dedup.incremental_dedup — exact semi-join + LSH new×base
 only) before writing, recording per-doc decisions under ``decisions/``
-— the recurring-crawl shape.  For continuous ingestion use
-streaming/dedup_stream.run_streaming_dedup instead.
+— the recurring-crawl shape.
 
 All cluster config (AQE, Arrow, shuffle partitions) comes from
 spark-submit conf; this entry point only sets what the pipeline owns.

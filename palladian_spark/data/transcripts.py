@@ -142,11 +142,6 @@ def synthetic_transcripts_pdf(n_convs: int = 10, turns_per_conv: int = 12,
     return transcripts, gold
 
 
-def synthetic_transcripts_df(spark: SparkSession, **kwargs) -> Tuple[DataFrame, DataFrame]:
-    tp, gold = synthetic_transcripts_pdf(**kwargs)
-    return spark.createDataFrame(tp), spark.createDataFrame(gold)
-
-
 # ---------------------------------------------------------------------------
 # distributed generator — all columns are JVM-side expressions of the row id
 # ---------------------------------------------------------------------------

@@ -84,15 +84,10 @@ def make_surface_linker(norm_map, entries, metric: str, threshold: float,
             return hit
         canon, sim = norm_map.get(normalize_surface_py(value)), 1.0
         if canon is None and entries:
-            best, best_sim = None, threshold
-            cand = ((entries[i] for i in index.candidates(value, frac))
-                    if index is not None else iter(entries))
-            for _eid, surface, _concept in cand:
-                s = sim_fn(value, surface)
-                if s >= best_sim:
-                    best, best_sim = surface, s
+            best, best_sim = _fuzzy_argmax(value, entries, index, frac,
+                                           sim_fn, threshold)
             if best is not None:
-                canon, sim = best, best_sim
+                canon, sim = best[1], best_sim
         if canon is not None and min_link_sim is not None \
                 and sim < min_link_sim:
             canon = None
@@ -101,6 +96,23 @@ def make_surface_linker(norm_map, entries, metric: str, threshold: float,
         return canon
 
     return link
+
+
+def _fuzzy_argmax(value: str, entries: List[Tuple[str, str, str]],
+                  index: Optional[_BlockedDict], frac: Optional[float],
+                  sim_fn, threshold: float):
+    """(entry, sim) of the best (entity_id, surface, concept) entry for
+    ``value`` with sim ≥ ``threshold``, or (None, threshold).  Candidates
+    (the ``index`` survivors, or every entry without one) are scored in
+    dictionary order and a tie goes to the LAST maximal entry."""
+    cand = ((entries[i] for i in index.candidates(value, frac))
+            if index is not None else entries)
+    best, best_sim = None, threshold
+    for entry in cand:
+        s = sim_fn(value, entry[1])
+        if s >= best_sim:
+            best, best_sim = entry, s
+    return best, best_sim
 
 
 # ---------------------------------------------------------------------------
@@ -252,16 +264,8 @@ def fuzzy_link_df(values: DataFrame, entity_dict: DataFrame,
             out = {k: [] for k in
                    ("value", "entity_id", "canonical", "concept", "link_sim")}
             for value in pdf["value"]:
-                best, best_sim = None, threshold
-                if index is not None:
-                    cand = ((entries[i] for i in
-                             index.candidates(value, frac)))
-                else:
-                    cand = iter(entries)
-                for entity_id, surface, concept in cand:
-                    s = sim_fn(value, surface)
-                    if s >= best_sim:
-                        best, best_sim = (entity_id, surface, concept), s
+                best, best_sim = _fuzzy_argmax(value, entries, index, frac,
+                                               sim_fn, threshold)
                 if best is not None:
                     out["value"].append(value)
                     out["entity_id"].append(best[0])

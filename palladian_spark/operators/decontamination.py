@@ -121,12 +121,3 @@ def span_overlap(docs: DataFrame, eval_docs: DataFrame, n: int = 8,
             .select(id_col,
                     F.coalesce("max_span_tokens", F.lit(0))
                     .cast("int").alias("max_span_tokens")))
-
-
-def decontaminate(docs: DataFrame, eval_docs: DataFrame, n: int = 8,
-                  max_hits: int = 0, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    """Training docs with ≤ ``max_hits`` overlapping eval n-grams."""
-    flags = ngram_overlap_flags(docs, eval_docs, n, id_col, text_col)
-    keep = flags.where(F.col("n_hits") <= max_hits).select(id_col)
-    return docs.join(keep, id_col, "left_semi")

@@ -40,16 +40,6 @@ def token_shingles(text_col, k: int = 3):
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k))))
 
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Hash-groupBy exact dedup: fingerprint → group size (>1 = dup set)."""
-    return (docs
-            .groupBy(F.md5(F.col(text_col)).alias("fingerprint"))
-            .agg(F.count("*").alias("n_dups"),
-                 F.min(id_col).alias("keep_doc_id"))
-            .where(F.col("n_dups") > 1))
-
-
 def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text", num_hashes: int = 8,
                        shingle_k: int = 3) -> DataFrame:

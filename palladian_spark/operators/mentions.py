@@ -61,21 +61,19 @@ SENTENCE_SCHEMA = StructType([
 ])
 
 
-def repartition_salted(df: DataFrame, num_partitions: Optional[int] = None,
-                       salt_cols: tuple = ("conv_id", "turn_idx")) -> DataFrame:
-    """Skew-aware repartition: hash on ``salt_cols`` (default the turn key)
-    so a hot conversation spreads across partitions.  Lossless for all
+def repartition_salted(df: DataFrame,
+                       num_partitions: Optional[int] = None) -> DataFrame:
+    """Skew-aware repartition: hash on the turn key (conv_id, turn_idx) so
+    a hot conversation spreads across partitions.  Lossless for all
     row-local stages (mention extraction never needs cross-turn state —
     SURVEY.md §2.9)."""
-    cols = [F.xxhash64(*salt_cols)]
+    salt = F.xxhash64("conv_id", "turn_idx")
     if num_partitions:
-        return df.repartition(num_partitions, *cols)
-    return df.repartition(*cols)
+        return df.repartition(num_partitions, salt)
+    return df.repartition(salt)
 
 
-def ensure_map_parallelism(df: DataFrame,
-                           salt_cols: tuple = ("conv_id", "turn_idx")
-                           ) -> DataFrame:
+def ensure_map_parallelism(df: DataFrame) -> DataFrame:
     """Guarantee the Python-heavy Arrow stages get full-cluster parallelism.
 
     When the upstream plan ends in a small scan or an AQE-coalesced shuffle
@@ -112,7 +110,7 @@ def ensure_map_parallelism(df: DataFrame,
         n_files = 0
     if n_files >= target and not _plan_may_shuffle(df):
         return df
-    return repartition_salted(df, target, salt_cols)
+    return repartition_salted(df, target)
 
 
 _SHUFFLE_NODE_RE = None

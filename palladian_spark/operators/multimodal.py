@@ -25,16 +25,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StringType, StructField, StructType,
+    IntegerType, LongType, StringType, StructField, StructType,
 )
-
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("media_type", StringType()),
-    StructField("payload", BinaryType()),
-    StructField("payload_len", IntegerType()),
-    StructField("sha", StringType()),
-])
 
 META_SCHEMA = StructType([
     StructField("media_id", LongType()),

@@ -41,13 +41,6 @@ from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StructField, StructType,
 )
 
-TOPK_SCHEMA = StructType([
-    StructField("a_id", LongType()),
-    StructField("b_id", LongType()),
-    StructField("cos_sim", DoubleType()),
-    StructField("rank", IntegerType()),
-])
-
 PARTIAL_SCHEMA = StructType([
     StructField("a_id", LongType()),
     StructField("b_id", LongType()),

@@ -383,82 +383,6 @@ def fuzzy_enabled(metric: Optional[str]) -> bool:
     return metric is not None and metric != "none"
 
 
-def induce_patterns(mined: DataFrame, min_count: int = 2,
-                    max_patterns: int = 20) -> List[PredicatePattern]:
-    """Pattern induction: mined frequent inter-mention windows →
-    PredicatePatterns ready for extract_triples — the learning loop the
-    reference's PatternAnalyzer feeds manually.
-
-    Each kept (subj_type, obj_type, window) row becomes a typed pattern:
-    the window words escaped into a whitespace-flexible fullmatch regex
-    (so ``works for`` also matches ``works  for`` with an optional comma
-    lead-in, mirroring the seed patterns' shape) and a predicate name
-    slugged from the window words.  Deterministic: rows ordered by
-    (count desc, subj_type, obj_type, window), capped at
-    ``max_patterns``.  The collect is MODEL-sized (≤ max_patterns rows).
-    """
-    import re as _re
-    rows = (mined
-            .where(F.col("count") >= min_count)
-            .orderBy(F.desc("count"), "subj_type", "obj_type", "window")
-            .limit(max_patterns)
-            .collect())
-    out: List[PredicatePattern] = []
-    seen = set()
-    for r in rows:
-        words = r["window"].split()
-        if not words:
-            continue
-        pred = _re.sub(r"\W+", "_", " ".join(words)).strip("_") or "related_to"
-        key = (pred, r["subj_type"], r["obj_type"])
-        if key in seen:
-            continue
-        seen.add(key)
-        # mined windows are lowercased — match the raw window text
-        # case-insensitively
-        rx = (r"(?i)\s*,?\s*" + r"\s+".join(regex.escape(w) for w in words)
-              + r"\s*")
-        out.append(pattern(pred, rx, {r["subj_type"]}, {r["obj_type"]}))
-    return out
-
-
-def filter_patterns_by_precision(transcripts: DataFrame, model: NerModel,
-                                 patterns: Sequence[PredicatePattern],
-                                 gold: DataFrame,
-                                 min_precision: float = 0.5,
-                                 min_support: int = 1
-                                 ) -> List[PredicatePattern]:
-    """Self-curation for the induction loop: score each candidate pattern
-    against gold triples and keep only the precise ones.
-
-    One distributed extract_triples pass over ALL candidates, a left join
-    against gold on (conv_id, turn_idx, subj, obj) — deliberately
-    pred-agnostic, since induced predicate slugs come from window words
-    while gold predicates are hand-named — then per-predicate precision
-    aggregation (a MODEL-sized collect: one row per pattern slug; the
-    occurrence counts stay distributed).  A pattern that never fires has
-    no supporting evidence and is dropped with the imprecise ones.
-
-    The reference's PatternAnalyzer leaves this judgement to the human
-    feeding it seeds; at pipeline scale the loop needs to curate itself
-    before a noisy induced pattern floods the graph.
-    """
-    patterns = list(patterns)
-    extracted = extract_triples(transcripts, model, patterns=patterns)
-    keys = ["conv_id", "turn_idx", "subj", "obj"]
-    g = gold.select(*keys).distinct().withColumn("_hit", F.lit(1))
-    stats = (extracted
-             .join(g, keys, "left")
-             .groupBy("pred")
-             .agg(F.count(F.lit(1)).alias("n"),
-                  F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("hits"))
-             .collect())
-    keep = {r["pred"] for r in stats
-            if r["n"] >= min_support
-            and r["hits"] / r["n"] >= min_precision}
-    return [p for p in patterns if p.pred in keep]
-
-
 def cooccurrence_document_pairs(mentions: DataFrame,
                                 doc_cols: tuple = ("conv_id",),
                                 max_doc_vocab: int | None = None) -> DataFrame:

@@ -22,9 +22,16 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _default_driver_memory() -> str:
+    """The driver heap when ``SPARK_DRIVER_MEMORY`` is unset: 24g, or half
+    the host's physical memory when that is less (the heap plus the JVM's
+    off-heap and the Python workers must still fit)."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(24 * 1024, half_mb)}m"
+
+
 def get_spark(app_name: str = "palladian-spark", master: str | None = None,
-              shuffle_partitions: int | None = None,
-              arrow_batch_size: int = 4096) -> SparkSession:
+              shuffle_partitions: int | None = None) -> SparkSession:
     cores = default_parallelism()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cores}]")
     shuffle_partitions = shuffle_partitions or max(2 * cores, 8)
@@ -43,12 +50,13 @@ def get_spark(app_name: str = "palladian-spark", master: str | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_size))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.session.timeZone", "UTC")
         # local mode = driver IS the executor: size the heap for cached
         # intermediate tables + 32 concurrent tasks (8g measurably GC-bound
         # on multi-million-row runs)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY")
+                or _default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

@@ -7,6 +7,9 @@ and streaming share one code path and one set of correctness tests.
 
   * ``stream_transcripts``       — file-source readStream with the fixed
                                    input schema (BASELINE.json input_hint).
+  * ``run_foreach_batch``        — the one foreachBatch runner (checkpoint,
+                                   availableNow or 10 s trigger) that this
+                                   and ``kg_maintain`` share.
   * ``run_incremental_pipeline`` — foreachBatch driver: each micro-batch
                                    appends triples + a lineage row keyed by
                                    batch_id; the streaming checkpoint gives
@@ -27,7 +30,7 @@ batches.
 from __future__ import annotations
 
 import time
-from typing import Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -48,22 +51,35 @@ def stream_transcripts(spark: SparkSession, input_dir: str,
     return reader.load(input_dir)
 
 
+def run_foreach_batch(stream: DataFrame, process_batch, checkpoint_dir: str,
+                      available_now: bool = True):
+    """Run ``process_batch(batch_df, batch_id)`` on each micro-batch of
+    ``stream``, with its progress checkpointed in ``checkpoint_dir``.  With
+    ``available_now`` the query drains what the input holds now, stops and
+    is returned terminated; otherwise it is returned running, triggered
+    every 10 seconds."""
+    writer = (stream.writeStream
+              .foreachBatch(process_batch)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        query = writer.trigger(availableNow=True).start()
+        query.awaitTermination()
+        return query
+    return writer.trigger(processingTime="10 seconds").start()
+
+
 def run_incremental_pipeline(spark: SparkSession, input_dir: str,
                              output_dir: str, model,
                              entity_dict: DataFrame,
-                             patterns: Optional[Sequence] = None,
                              available_now: bool = True):
     """readStream → foreachBatch(batch KG pipeline) → append triples +
     lineage.  With ``available_now`` the query drains everything currently
     in ``input_dir`` and stops — rerunning later processes ONLY new files
     (checkpoint-resume for ingestion)."""
-    from palladian_spark.relations import (
-        DEFAULT_PATTERNS, extract_canonical_triples)
-    patterns = tuple(patterns) if patterns is not None else tuple(DEFAULT_PATTERNS)
+    from palladian_spark.relations import extract_canonical_triples
 
     triples_dir = f"{output_dir}/triples"
     lineage_dir = f"{output_dir}/lineage"
-    checkpoint_dir = f"{output_dir}/_checkpoint"
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # fused extraction+linking (one Arrow stage, no per-batch mapping
@@ -71,8 +87,7 @@ def run_incremental_pipeline(spark: SparkSession, input_dir: str,
         # than in batch mode; equivalence pinned by
         # tests/test_fused_canonicalize.py)
         obs = Observation()
-        triples = (extract_canonical_triples(batch_df, model, entity_dict,
-                                             patterns=patterns)
+        triples = (extract_canonical_triples(batch_df, model, entity_dict)
                    .observe(obs, F.count(F.lit(1)).alias("n")))
         # idempotent sink: each micro-batch OVERWRITES its own partition
         # directory, so a retried/replayed batch_id (driver crash before
@@ -92,15 +107,9 @@ def run_incremental_pipeline(spark: SparkSession, input_dir: str,
         # before resuming — parquet refuses mixed flat/partitioned dirs
         write_batch(lineage, lineage_dir, batch_id)
 
-    stream = stream_transcripts(spark, input_dir)
-    writer = (stream.writeStream
-              .foreachBatch(process_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.trigger(processingTime="10 seconds").start()
+    return run_foreach_batch(stream_transcripts(spark, input_dir),
+                             process_batch, f"{output_dir}/_checkpoint",
+                             available_now)
 
 
 def windowed_mention_counts(transcripts_stream: DataFrame,

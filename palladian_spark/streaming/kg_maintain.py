@@ -62,12 +62,13 @@ and touches O(batch + novel edges), not O(graph).
 from __future__ import annotations
 
 import time
-from typing import Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from palladian_spark.session import local_frame
-from palladian_spark.streaming.incremental import stream_transcripts
+from palladian_spark.streaming.incremental import (run_foreach_batch,
+                                                   stream_transcripts)
 from palladian_spark.streaming.store import (committed_batches,
                                              compact_batches, read_batches,
                                              write_batch)
@@ -181,7 +182,6 @@ def _current_watermark(spark: SparkSession, output_dir: str,
 def run_streaming_kg_maintenance(spark: SparkSession, input_dir: str,
                                  output_dir: str, model,
                                  entity_dict: DataFrame,
-                                 patterns: Optional[Sequence] = None,
                                  max_files_per_trigger: Optional[int] = None,
                                  available_now: bool = True,
                                  lateness_horizon_sec: Optional[float] = None):
@@ -196,12 +196,7 @@ def run_streaming_kg_maintenance(spark: SparkSession, input_dir: str,
     contract as every other store) instead of the main artifacts; fold
     them back with ``reconciled_artifacts``.  None (default) disables the
     split — every row is on time, the pre-round-5 behavior."""
-    from palladian_spark.relations import (
-        DEFAULT_PATTERNS, extract_canonical_triples)
-    patterns = (tuple(patterns) if patterns is not None
-                else tuple(DEFAULT_PATTERNS))
-
-    checkpoint_dir = f"{output_dir}/_checkpoint"
+    from palladian_spark.relations import extract_canonical_triples
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
@@ -223,22 +218,15 @@ def run_streaming_kg_maintenance(spark: SparkSession, input_dir: str,
                 on_time = batch_df.where(~is_late | F.col("ts").isNull())
             else:
                 on_time = batch_df
-        triples = extract_canonical_triples(on_time, model, entity_dict,
-                                            patterns=patterns)
+        triples = extract_canonical_triples(on_time, model, entity_dict)
         _maintain_batch(spark, triples, bid, output_dir,
                         max_event_ts=max_ts, n_late=n_late)
         if lateness_horizon_sec is not None:
             batch_df.unpersist()
 
-    stream = stream_transcripts(spark, input_dir, max_files_per_trigger)
-    writer = (stream.writeStream
-              .foreachBatch(process_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.trigger(processingTime="10 seconds").start()
+    return run_foreach_batch(
+        stream_transcripts(spark, input_dir, max_files_per_trigger),
+        process_batch, f"{output_dir}/_checkpoint", available_now)
 
 
 def fold_evidence(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -283,8 +271,7 @@ def read_late_turns(spark: SparkSession, output_dir: str) -> Optional[DataFrame]
 
 
 def reconciled_artifacts(spark: SparkSession, output_dir: str, model,
-                         entity_dict: DataFrame,
-                         patterns: Optional[Sequence] = None) -> dict:
+                         entity_dict: DataFrame) -> dict:
     """Read-time reconciliation of the late-data correction store:
     {edges, evidence, degrees, components} DataFrames equal to what the
     main stores WOULD hold had every late turn arrived on time (the
@@ -302,8 +289,7 @@ def reconciled_artifacts(spark: SparkSession, output_dir: str, model,
     and truncates the correction store."""
     from palladian_spark.graph import (apply_component_delta,
                                        apply_degree_delta)
-    from palladian_spark.relations import (
-        DEFAULT_PATTERNS, extract_canonical_triples)
+    from palladian_spark.relations import extract_canonical_triples
 
     edges = _read_all(spark, f"{output_dir}/edges") \
         .select("subj", "pred", "obj")
@@ -316,10 +302,7 @@ def reconciled_artifacts(spark: SparkSession, output_dir: str, model,
         return {"edges": edges, "evidence": evidence, "degrees": degrees,
                 "components": components}
 
-    patterns = (tuple(patterns) if patterns is not None
-                else tuple(DEFAULT_PATTERNS))
-    late_triples = extract_canonical_triples(
-        late, model, entity_dict, patterns=patterns) \
+    late_triples = extract_canonical_triples(late, model, entity_dict) \
         .select("subj", "pred", "obj")
     late_evidence = (late_triples.groupBy("subj", "pred", "obj")
                      .agg(F.count(F.lit(1)).cast("long").alias("n_obs")))

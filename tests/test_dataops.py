@@ -27,14 +27,6 @@ def docs_df(spark):
 # dedup
 # ---------------------------------------------------------------------------
 
-def test_exact_duplicates(spark, docs_df):
-    from palladian_spark.operators.dedup import exact_duplicates
-    rows = exact_duplicates(docs_df).collect()
-    assert len(rows) == 1
-    assert rows[0]["n_dups"] == 2
-    assert rows[0]["keep_doc_id"] == 0
-
-
 def test_minhash_dedup_finds_near_dup(spark, docs_df):
     from palladian_spark.operators.dedup import minhash_dedup_pairs
     pairs = {(r["a_id"], r["b_id"]): r["jaccard"]

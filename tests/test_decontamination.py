@@ -2,8 +2,7 @@
 
 
 def test_ngram_overlap_and_filter(spark):
-    from palladian_spark.operators.decontamination import (
-        decontaminate, ngram_overlap_flags)
+    from palladian_spark.operators.decontamination import ngram_overlap_flags
     eval_docs = spark.createDataFrame(
         [(100, "the secret benchmark answer is forty two exactly")],
         "doc_id long, text string")
@@ -20,9 +19,6 @@ def test_ngram_overlap_and_filter(spark):
     assert flags[2] >= 1          # contains full 5-grams of the benchmark
     assert flags[3] == 0          # only a 3-word fragment — below n
     assert flags[4] == 0          # shorter than n → no full n-grams
-    kept = {r["doc_id"] for r in
-            decontaminate(train, eval_docs, n=5).collect()}
-    assert kept == {1, 3, 4}
 
 
 def test_span_overlap_longest_run(spark):

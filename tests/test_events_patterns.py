@@ -1,5 +1,5 @@
-"""Event-stream operators (sessionize, windows, activity), FP-Growth
-wrapper, and LSH-ANN recall vs the exact baseline."""
+"""Event-stream operators (sessionize, windows, activity) and LSH-ANN
+recall vs the exact baseline."""
 
 import datetime as dt
 
@@ -55,16 +55,6 @@ def test_user_activity(spark, events_df):
     rows = {r["user_id"]: r for r in user_activity(events_df).collect()}
     assert rows[1]["n_events"] == 5 and rows[1]["n_event_types"] == 2
     assert rows[2]["n_events"] == 2
-
-
-def test_fpgrowth_session_baskets(spark, events_df):
-    from palladian_spark.operators.patterns import (
-        frequent_itemsets, session_event_baskets)
-    baskets = session_event_baskets(events_df)
-    itemsets, rules = frequent_itemsets(baskets, min_support=0.2)
-    freq = {tuple(r["items"]): r["freq"] for r in itemsets.collect()}
-    assert freq[("click",)] == 4          # click appears in every session
-    assert ("buy", "click") in freq or ("buy",) in freq
 
 
 def test_lsh_ann_recall_vs_exact(spark):

@@ -13,7 +13,7 @@ from palladian_spark.data.transcripts import (
     entity_dictionary_pdf,
     generate_transcripts_df,
     generated_gold_triples_df,
-    synthetic_transcripts_df,
+    synthetic_transcripts_pdf,
 )
 from palladian_spark.evaluation import evaluate_mentions_df, triple_prf
 from palladian_spark.linking import link_mentions
@@ -24,15 +24,15 @@ from palladian_spark.operators.mentions import (
     remove_nested_df,
     split_sentences_df,
 )
-from palladian_spark.pipeline import default_model, run_pipeline
-from palladian_spark.relations import extract_triples
+from palladian_spark.pipeline import run_pipeline
 from palladian_spark.textproc.taggers import tag_candidates
 
 
 @pytest.fixture(scope="module")
 def transcripts(spark):
-    df, gold = synthetic_transcripts_df(spark, n_convs=8, turns_per_conv=10)
-    return df.cache(), gold.cache()
+    tp, gold = synthetic_transcripts_pdf(n_convs=8, turns_per_conv=10)
+    return (spark.createDataFrame(tp).cache(),
+            spark.createDataFrame(gold).cache())
 
 
 def test_extract_candidates_matches_kernel(spark, transcripts):
@@ -243,65 +243,3 @@ def test_mention_evaluation_scores(spark):
     assert scores["exact_recall"] == pytest.approx(1 / 3)
     # MUC gives half credit for ERROR3: (1 + 2*1) / (2*3)
     assert scores["muc_precision"] == pytest.approx(0.5)
-
-
-def test_pattern_induction_loop(spark):
-    """Mined windows → induced PredicatePatterns → extract_triples finds
-    the relations WITHOUT any seed patterns (the learning loop)."""
-    from palladian_spark.pipeline import default_model
-    from palladian_spark.relations import (
-        extract_triples, induce_patterns, mine_patterns_df)
-    from palladian_spark.data.transcripts import synthetic_transcripts_pdf
-
-    tp, _gold = synthetic_transcripts_pdf(n_convs=6, turns_per_conv=4)
-    # a null-text turn: mining and extraction must skip it
-    null_turn = tp.iloc[:1].assign(conv_id="c_null", text=None)
-    t = spark.createDataFrame(pd.concat([tp, null_turn], ignore_index=True))
-    model = default_model()
-
-    mined = mine_patterns_df(t, model)
-    induced = induce_patterns(mined, min_count=2, max_patterns=10)
-    assert induced, "no patterns induced"
-    preds = {p.pred for p in induced}
-    assert any("works" in p for p in preds) or any("in" == p for p in preds)
-
-    triples = extract_triples(t, model, patterns=induced)
-    rows = triples.collect()
-    assert rows, "induced patterns extracted no triples"
-    # every triple's predicate comes from the induced set
-    assert {r["pred"] for r in rows} <= preds
-
-
-def test_pattern_precision_filter_drops_planted_noise(spark):
-    """Induction self-curation (round 3): a planted noisy pattern that
-    fires on real mention pairs but never matches gold is filtered; the
-    precise induced patterns survive."""
-    from palladian_spark.pipeline import default_model
-    from palladian_spark.relations import (
-        filter_patterns_by_precision, induce_patterns, mine_patterns_df,
-        pattern)
-    from palladian_spark.data.transcripts import synthetic_transcripts_pdf
-
-    tp, gold_pdf = synthetic_transcripts_pdf(n_convs=6, turns_per_conv=4)
-    t = spark.createDataFrame(tp)
-    gold = spark.createDataFrame(gold_pdf)
-    model = default_model()
-
-    mined = mine_patterns_df(t, model)
-    induced = induce_patterns(mined, min_count=2, max_patterns=10)
-    assert induced
-    # noisy pattern: fires on ANY inter-mention window (catch-all), so it
-    # pairs mentions that gold never relates — precision ≈ low
-    from palladian_spark.relations import extract_triples
-    noisy = pattern("noise_rel", r"(?i).*")
-    # the noise must actually FIRE — otherwise the filter drops it for
-    # zero support and the test proves nothing about precision
-    assert extract_triples(t, model, patterns=[noisy]).count() > 0
-    candidates = induced + [noisy]
-
-    kept = filter_patterns_by_precision(t, model, candidates, gold,
-                                        min_precision=0.8)
-    kept_preds = {p.pred for p in kept}
-    assert "noise_rel" not in kept_preds, "planted noise survived"
-    assert kept_preds, "precision filter killed every pattern"
-    assert kept_preds <= {p.pred for p in induced}

@@ -134,114 +134,3 @@ def test_lineage_idempotent_under_replay(spark, workdir):
     assert {r["batch_id"] for r in lineage_after} == \
         {r["batch_id"] for r in lineage_before}
     assert spark.read.parquet(f"{out_dir}/triples").count() == triples_before
-
-
-def test_stateful_conversation_stats_across_restarts(spark, workdir):
-    """applyInPandasWithState: custom per-conversation state survives
-    micro-batches AND a query restart (checkpointed state store)."""
-    from palladian_spark.streaming.incremental import stream_transcripts
-    from palladian_spark.streaming.stateful import conversation_running_stats
-
-    in_dir = str(workdir / "in")
-    ckpt = str(workdir / "ckpt")
-
-    def run_drain(_table):
-        rows = []
-
-        def sink(df, _bid):
-            rows.extend(df.collect())
-
-        stream = stream_transcripts(spark, in_dir)
-        q = (conversation_running_stats(stream)
-             .writeStream.foreachBatch(sink)
-             .outputMode("update")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        # last emitted row per conversation wins (update mode)
-        out = {}
-        for r in rows:
-            out[r["conv_id"]] = (r["n_turns"], r["n_chars"])
-        return out
-
-    _write_batch(spark, in_dir, "s1", 3)
-    first = run_drain("stateful_run1")
-    assert first and all(n > 0 for n, _ in first.values())
-
-    # second input file; a FRESH query on the same checkpoint must resume
-    # the state store: counts accumulate across restarts per conversation
-    _write_batch(spark, in_dir, "s1", 3)  # same conv ids again
-    second = run_drain("stateful_run2")
-    assert set(second) == set(first)
-    for conv, (n1, c1) in first.items():
-        n2, c2 = second[conv]
-        assert n2 == 2 * n1 and c2 == 2 * c1, conv
-
-
-def test_stream_sessionize_event_time_timeout(spark, workdir):
-    """Event-time-timeout sessionizer (round 3): sessions close only when
-    the WATERMARK passes end + timeout, state (the open-island list)
-    survives a query restart on the same checkpoint, and the closed
-    sessions equal the batch gaps-and-islands operator's on the same
-    events."""
-    import pandas as pd
-    from palladian_spark.streaming.stateful import stream_sessionize
-
-    in_dir = str(workdir / "in")
-    ckpt = str(workdir / "ckpt")
-    t0 = pd.Timestamp("2026-01-01 08:00:00")
-    m = pd.Timedelta(minutes=1)
-
-    real = [  # (user, ts): A has two sessions (65-min gap), B one
-        ("A", t0), ("A", t0 + 5 * m), ("A", t0 + 10 * m),
-        ("A", t0 + 75 * m),
-        ("B", t0 + 2 * m),
-    ]
-
-    def write(rows):
-        spark.createDataFrame(pd.DataFrame(rows, columns=["user_id", "ts"])) \
-            .coalesce(1).write.mode("append").parquet(in_dir)
-
-    def drain():
-        out = []
-        stream = (spark.readStream.schema("user_id string, ts timestamp")
-                  .parquet(in_dir).withWatermark("ts", "1 minute"))
-        q = (stream_sessionize(stream, timeout_minutes=30)
-             .writeStream.foreachBatch(lambda df, _b: out.extend(df.collect()))
-             .outputMode("append")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        return out
-
-    # batch 1: the real events + a probe far enough ahead that, once its
-    # event time becomes the watermark, every real session's end +
-    # timeout is behind it (availableNow may split files into several
-    # micro-batches, so some sessions can already close here)
-    write(real + [("zz", t0 + pd.Timedelta(hours=10))])
-    first = drain()
-    # nothing closes before the watermark has moved past end + timeout:
-    # every emitted session ends ≥ timeout+delay behind the probe
-    for r in first:
-        assert r["session_end_us"] <= (
-            (t0 + pd.Timedelta(hours=10)).timestamp() * 1e6
-            - 31 * 60 * 1e6)
-
-    # batch 2 (FRESH query, same checkpoint): the resumed state closes
-    # every remaining real session under the advanced watermark
-    write([("zz", t0 + pd.Timedelta(hours=20))])
-    second = drain()
-    closed = {(r["key"], r["session_start_us"], r["session_end_us"],
-               r["n_events"])
-              for r in first + second if r["key"] != "zz"}
-
-    # batch twin on the same events
-    from palladian_spark.operators.events import sessionize
-    batch = sessionize(
-        spark.createDataFrame(pd.DataFrame(real, columns=["user_id", "ts"])),
-        timeout_minutes=30, tiebreak_col=None)
-    want = {(r["user_id"],
-             r["session_start"].timestamp() * 1_000_000,
-             r["session_end"].timestamp() * 1_000_000,
-             r["n_events"]) for r in batch.collect()}
-    assert {(k, float(s), float(e), n) for k, s, e, n in closed} == want
